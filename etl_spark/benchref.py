@@ -206,5 +206,9 @@ def gather_rate(workers: int, mb: int = 256) -> float:
 
 
 def gather_ceiling(n: int) -> float:
-    """Machine's own N->4N scaling for latency-bound random access."""
-    return round(gather_rate(4 * n) / (4 * gather_rate(n)), 3)
+    """Machine's own N->4N scaling for latency-bound random access;
+    0.0 when the N-worker rate reads 0 (every timed task landed on a
+    cold pool worker)."""
+    wide = gather_rate(4 * n)
+    narrow = gather_rate(n)
+    return round(wide / (4 * narrow), 3) if narrow > 0 else 0.0

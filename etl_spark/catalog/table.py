@@ -43,6 +43,7 @@ import uuid
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType
 
 from etl_spark.catalog.snapshot import FileEntry, Snapshot, SnapshotLog
 from etl_spark.functions.hashing import key_bucket
@@ -52,7 +53,12 @@ from etl_spark.operators.watermark import (
     admission_filter,
     merge_watermarks,
 )
-from etl_spark.schemas import KEY_COLUMNS, TABLE_COLUMNS
+from etl_spark.schemas import (
+    KEY_COLUMNS,
+    METRICS_SCHEMA,
+    TABLE_COLUMNS,
+    table_schema,
+)
 
 # event-envelope columns that never become table columns
 ENVELOPE_COLUMNS = {"seq", "part_id", "op", "ts", "extra"}
@@ -166,7 +172,6 @@ class LakeTable:
         from pyspark.sql.types import (
             DoubleType,
             LongType,
-            StringType,
             StructField,
             StructType,
         )
@@ -246,17 +251,14 @@ class LakeTable:
     # reads
     # ------------------------------------------------------------------ #
     def _read_files(self, snap: Snapshot, entries: list[FileEntry]) -> DataFrame:
-        cols = snap.columns
+        """``entries`` at ``snap``'s columns, read with the declared
+        schema: no inference job, and files older than a promoted column
+        read it as null."""
+        schema = table_schema(snap.columns)
         if not entries:
-            types = {"_ingest_seq": "long", "_batch_id": "long", "_deleted": "boolean"}
-            schema = ", ".join(f"`{c}` {types.get(c, 'string')}" for c in cols)
             return self.spark.createDataFrame([], schema)
         paths = [os.path.join(self.root, e.path) for e in entries]
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        for c in cols:  # evolution: old files lack late columns
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast("string"))
-        return df.select(*cols)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def _resolve(
         self,
@@ -371,7 +373,6 @@ class LakeTable:
         canonicalizer=None,
         mode: str | None = None,
         set_properties: dict[str, str] | None = None,
-        expected_rows: int | None = None,
     ) -> dict:
         """Exactly-once merge of one micro-batch.
 
@@ -398,16 +399,6 @@ class LakeTable:
                                ``mor_min_amplification`` × delta keys);
                                None reads the table property
                                ``write_mode``.
-        expected_rows        — accepted for caller compatibility; no
-                               longer drives any behavior.  An earlier
-                               build used it to overlap the stats job on
-                               a background thread; the resulting
-                               CONCURRENT AQE SQL executions hit a
-                               lost-stage-event race in Spark's
-                               AdaptiveSparkPlanExec (the stream hung
-                               forever in withFinalPlanUpdate with an
-                               idle JVM), so every per-batch job now
-                               runs on the single foreachBatch chain.
         Returns a stats dict (also the metrics-table rows' source).
         """
         t0 = time.monotonic()
@@ -440,7 +431,7 @@ class LakeTable:
         try:
             return self._apply_inner(
                 d0, d, batch_id, snap, strategy, t0, stage_dir, canonicalizer,
-                mode, set_properties, expected_rows,
+                mode, set_properties,
             )
         finally:
             shutil.rmtree(stage_dir, ignore_errors=True)
@@ -457,7 +448,6 @@ class LakeTable:
         canonicalizer=None,
         mode=None,
         set_properties=None,
-        expected_rows=None,
     ) -> dict:
         phases: dict[str, float] = {}
 
@@ -639,8 +629,22 @@ class LakeTable:
                     .drop("_stage_b")
                 )
             to_write.write.mode("overwrite").parquet(stage_dir)
-            staged = self.spark.read.parquet(stage_dir)
+            staged = self.spark.read.schema(d.schema).parquet(stage_dir)
         d = canonicalizer(staged) if canonicalizer is not None else staged
+        # -- schema evolution: delta columns not yet in the table.  Reads
+        # declare promoted columns as strings, so any other type is
+        # refused here, before a table file is written.
+        added = [
+            f for f in d.schema.fields
+            if f.name not in ENVELOPE_COLUMNS and f.name not in snap.columns
+        ]
+        bad = [f"{f.name} {f.dataType.simpleString()}" for f in added
+               if not isinstance(f.dataType, StringType)]
+        if bad:
+            raise TypeError(f"batch {batch_id} adds non-string column(s) "
+                            f"{', '.join(bad)}: new table columns must be strings")
+        new_cols = [f.name for f in added]
+        all_cols = list(snap.columns) + new_cols
         tp = mark("stage_delta", tp)
         if stage_obs is not None:
             vals = stage_obs.get
@@ -690,14 +694,6 @@ class LakeTable:
             e for e in snap.delta_files if not (set(e.buckets) & touched)
         ]
 
-        # -- schema evolution: delta columns not yet in the table ---------
-        new_cols = [
-            c
-            for c in d.columns
-            if c not in ENVELOPE_COLUMNS and c not in snap.columns and c != "content_sha"
-        ]
-        # content_sha handled explicitly since delta calls it content_sha too
-        all_cols = list(snap.columns) + [c for c in new_cols if c not in snap.columns]
         if new_cols:
             new_snap.columns = all_cols
             new_snap.schema_version = snap.schema_version + 1
@@ -829,8 +825,10 @@ class LakeTable:
             # copy-on-write: the touched slice (base files PLUS any
             # pending delta files in those buckets, LWW-pre-resolved so
             # the merge sees one row per key) is rewritten
+            # read at the batch's columns: files older than a column
+            # promoted now read it as null
             slice_df = (
-                self._resolve(snap, slice_base, slice_delta)
+                self._resolve(new_snap, slice_base, slice_delta)
                 if (slice_base or slice_delta)
                 else None
             )
@@ -1055,15 +1053,11 @@ class LakeTable:
         2. key-column-only scan of the slice semi-joined to delta ->
            matched keys (small) -> anti-join gives brand-new keys.
         """
-        tgt = slice_df
-        for c in all_cols:
-            if c not in tgt.columns:
-                tgt = tgt.withColumn(c, F.lit(None).cast("string"))
         dr = delta_rows.select(
             *KEY_COLUMNS,
             *[F.col(c).alias(f"_d_{c}") for c in all_cols if c not in KEY_COLUMNS],
         )
-        joined = tgt.join(F.broadcast(dr), KEY_COLUMNS, "left")
+        joined = slice_df.join(F.broadcast(dr), KEY_COLUMNS, "left")
         take = F.col("_d__ingest_seq").isNotNull() & (
             F.col("_d__ingest_seq") > F.col("_ingest_seq")
         )
@@ -1148,10 +1142,7 @@ class LakeTable:
 
         t = slice_df.withColumn("_src", F.lit(1))
         dd = delta_rows.withColumn("_src", F.lit(0))
-        u = t.unionByName(dd, allowMissingColumns=True)
-        for c in all_cols:
-            if c not in u.columns:
-                u = u.withColumn(c, F.lit(None).cast("string"))
+        u = t.unionByName(dd)
         u = (
             u.withColumn("bucket", bexpr)
             .withColumn("_slice", slice_expr)
@@ -1186,10 +1177,7 @@ class LakeTable:
 
         t = slice_df.withColumn("_src", F.lit(1))
         dd = delta_rows.withColumn("_src", F.lit(0))
-        u = t.unionByName(dd, allowMissingColumns=True)
-        for c in all_cols:
-            if c not in u.columns:
-                u = u.withColumn(c, F.lit(None).cast("string"))
+        u = t.unionByName(dd)
         w = Window.partitionBy(*KEY_COLUMNS).orderBy(
             F.desc("_ingest_seq"), F.desc("_src")
         )
@@ -1247,12 +1235,14 @@ class LakeTable:
         from urllib.parse import unquote, urlparse
 
         abs_dir = os.path.join(self.root, rel_dir)
-        # an empty write (no partition dirs) has nothing to scan — and
-        # spark.read on it would fail schema inference
+        # an empty write (no partition dirs) has nothing to scan
         if not any(s.startswith("bucket=") for s in os.listdir(abs_dir)):
             return []
+        # declared schema (no inference job); ``bucket`` is the
+        # partition column, typed here and parsed from the directory
+        schema = table_schema(["repo", "_deleted"]).add("bucket", IntegerType())
         stats = (
-            self.spark.read.parquet(abs_dir)
+            self.spark.read.schema(schema).parquet(abs_dir)
             .groupBy(F.input_file_name().alias("_file"), F.col("bucket"))
             .agg(
                 F.count("*").alias("rows"),
@@ -1529,7 +1519,7 @@ class LakeTable:
 
     def metrics(self) -> DataFrame:
         mdir = os.path.join(self.root, "metrics")
-        return self.spark.read.parquet(mdir)
+        return self.spark.read.schema(METRICS_SCHEMA).parquet(mdir)
 
     @staticmethod
     def _truncate_span(mdir: str, lo: int, hi: int, name: str, fence: int) -> None:
@@ -1762,6 +1752,9 @@ class LakeTable:
         differs, with ``change_op`` in {insert, update, delete}, the
         post-image columns, and ``pre_content_sha`` for update/delete.
 
+        Both sides read at ``to_version``'s columns, so a column
+        promoted in between shows null on the pre-image.
+
         Scale: carried-forward files (same manifest path in both
         snapshots) are skipped outright — copy-on-write guarantees a
         key's old and new images are either BOTH in rewritten files or
@@ -1807,26 +1800,23 @@ class LakeTable:
                 F.desc("_ingest_seq"), F.asc("_batch_id")
             )
 
-            def eff(snap, entries):
+            def eff(entries):
                 return (
-                    self._read_files(snap, entries)
+                    self._read_files(snap_b, entries)
                     .withColumn("_rn", F.row_number().over(w))
                     .filter(F.col("_rn") == 1)
                     .drop("_rn")
                 )
 
-            old = eff(snap_a, diff_a + context)
-            new = eff(snap_b, diff_b + context)
+            old = eff(diff_a + context)
+            new = eff(diff_b + context)
         else:
             # pure copy-on-write: whole-bucket rewrites guarantee a key's
             # old and new images are either both in the diff sets or both
             # carried — no resolution window needed
-            old = self._read_files(snap_a, diff_a)
+            old = self._read_files(snap_b, diff_a)
             new = self._read_files(snap_b, diff_b)
         data_cols = [c for c in snap_b.columns if c not in KEY_COLUMNS]
-        for c in data_cols:  # evolution: pre-snapshot lacks late columns
-            if c not in old.columns:
-                old = old.withColumn(c, F.lit(None).cast("string"))
         o = old.select(
             *KEY_COLUMNS, *[F.col(c).alias(f"_o_{c}") for c in data_cols]
         )

@@ -9,15 +9,16 @@ cross-checked by tests):
    ends with exactly one ``\\n``; content that normalizes to empty stays ""
 4. unicode NFC normalization
 
-Steps 1–3 are JVM-side regexp expressions (whole-stage codegen, zero
-Python).  Step 4 (NFC) has no Spark builtin, so it runs as a vectorized
-Arrow ``pandas_udf`` — the only Python hop in the pipeline.  The
-ASCII fast path is gated INSIDE the UDF (one vectorized regex scan per
-Arrow batch; pure-ASCII rows — the overwhelming majority of source
-code — pass through untouched).  A JVM-side ``when(rlike).otherwise``
-gate was measured SLOWER: Spark evaluates the UDF column for all rows
-regardless, and the otherwise-branch duplicates the whole regex
-normalization chain.
+Steps 1–3 are regex-free JVM-side string expressions (literal replace,
+split/rtrim/join; whole-stage codegen, zero Python — see
+``normalize_lines``).  Step 4 (NFC) has no Spark builtin, so it runs as
+a vectorized Arrow ``pandas_udf`` — the only Python hop in the
+pipeline.  The ASCII fast path is gated INSIDE the UDF (one vectorized
+regex scan per Arrow batch; pure-ASCII rows — the overwhelming majority
+of source code — pass through untouched).  A JVM-side
+``when(rlike).otherwise`` gate was measured SLOWER: Spark evaluates the
+UDF column for all rows regardless, and the otherwise-branch duplicates
+the whole normalization chain.
 
 Per-row Python UDFs are banned engine-wide (BASELINE.json:15); a
 plan-shape test asserts no BatchEvalPython node ever appears.

@@ -11,7 +11,9 @@ extra keys to top-level columns data-driven:
   plus newly observed ones become top-level string columns via
   ``try_element_at(extra, k)`` (null when absent — the back-fill);
 - the table commit bumps ``schema_version`` and appends the columns;
-  readers align old files with nulls (mergeSchema + explicit fill).
+  readers declare the snapshot's schema (promoted columns are strings,
+  ``schemas.table_schema``), so files written before a promotion read
+  the new column as null without a schema-inference job.
 """
 
 from __future__ import annotations

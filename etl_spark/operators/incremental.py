@@ -45,13 +45,18 @@ import shutil
 import uuid
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_spark.catalog.table import LakeTable
 from etl_spark.schemas import KEY_COLUMNS
 
 MeasureFn = Callable[[Callable[[str], Column]], dict[str, Column]]
+
+# footer key under which Spark's parquet writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class IncrementalView:
@@ -102,9 +107,13 @@ class IncrementalView:
         meta = self._meta()
         if meta is None:
             raise FileNotFoundError("view has never been refreshed")
-        return self.table.spark.read.parquet(
-            os.path.join(self.root, meta["state_dir"])
-        )
+        state = os.path.join(self.root, meta["state_dir"])
+        # the schema Spark recorded in one state file's footer, read on
+        # the driver: no inference job, and exact for every view root
+        part = next(n for n in sorted(os.listdir(state)) if n.endswith(".parquet"))
+        footer = pq.read_schema(os.path.join(state, part)).metadata
+        schema = StructType.fromJson(json.loads(footer[SPARK_SCHEMA_KEY]))
+        return self.table.spark.read.schema(schema).parquet(state)
 
     # ------------------------------------------------------------------ #
     def _resolver(self, side: str) -> Callable[[str], Column]:

@@ -12,6 +12,8 @@ shuffle at all; stats/fingerprints shuffle once on the grouping key.
 from __future__ import annotations
 
 import os
+import re
+import warnings
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -39,13 +41,52 @@ def spread(df: DataFrame) -> DataFrame:
     spread.  Non-file inputs (in-memory fixtures) pass through: they
     were created with explicit parallelism.
     """
+    n = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        est_splits = _scan_splits(df)
+    except Exception as e:
+        # a parallelism hint must never fail the query it decorates
+        warnings.warn(f"spread: no parallelism hint ({e!r})", RuntimeWarning,
+                      stacklevel=2)
+        return df
+    if est_splits is not None and est_splits < n:
+        return df.repartition(n)
+    return df
+
+
+# Spark's size-string units (JavaUtils.byteStringAsBytes); a bare number
+# is bytes
+_SIZE_UNITS = {
+    "": 1, "b": 1,
+    "k": 1 << 10, "kb": 1 << 10,
+    "m": 1 << 20, "mb": 1 << 20,
+    "g": 1 << 30, "gb": 1 << 30,
+    "t": 1 << 40, "tb": 1 << 40,
+    "p": 1 << 50, "pb": 1 << 50,
+}
+
+
+def size_bytes(value: str) -> int:
+    """Bytes in a Spark size conf value such as ``134217728``,
+    ``134217728b`` or ``4mb`` (case-insensitive)."""
+    m = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", value.lower())
+    if m is None or m.group(2) not in _SIZE_UNITS:
+        raise ValueError(f"not a Spark size string: {value!r}")
+    return int(m.group(1)) * _SIZE_UNITS[m.group(2)]
+
+
+def _scan_splits(df: DataFrame) -> int | None:
+    """Scan splits Spark will cut for ``df``'s files (None: no files)."""
     sess = df.sparkSession
-    n = sess.sparkContext.defaultParallelism
     files = df.inputFiles()
     if not files:
-        return df
-    max_split = int(sess.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    open_cost = int(sess.conf.get("spark.sql.files.openCostInBytes", "4194304"))
+        return None
+    max_split = size_bytes(
+        sess.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+    )
+    open_cost = size_bytes(
+        sess.conf.get("spark.sql.files.openCostInBytes", "4194304")
+    )
     total = 0
     for uri in files:
         p = uri[len("file:") :] if uri.startswith("file:") else uri
@@ -56,10 +97,7 @@ def spread(df: DataFrame) -> DataFrame:
             total += max_split
     # Spark packs files into splits of maxPartitionBytes, charging
     # openCostInBytes per file — mirror that arithmetic
-    est_splits = -(-(total + len(files) * open_cost) // max_split)
-    if est_splits < n:
-        return df.repartition(n)
-    return df
+    return -(-(total + len(files) * open_cost) // max_split)
 
 
 def tokens(col: Column) -> Column:

@@ -67,6 +67,21 @@ TABLE_COLUMNS = [f.name for f in TABLE_SCHEMA.fields]
 # key of the lake table
 KEY_COLUMNS = ["repo", "path"]
 
+
+def table_schema(columns: list[str]) -> StructType:
+    """Declared read schema for a snapshot's ``columns``.
+
+    System and core columns take their ``TABLE_SCHEMA`` types; promoted
+    ``extra`` columns are strings (``apply_batch`` refuses any other
+    type).  Reading the engine's own files with this schema skips the
+    footer-reading inference job, and files written before a column was
+    promoted read it as null."""
+    declared = {f.name: f for f in TABLE_SCHEMA.fields}
+    return StructType(
+        [declared.get(c, StructField(c, StringType(), nullable=True)) for c in columns]
+    )
+
+
 # ---------------------------------------------------------------------------
 # metrics / lineage table (FIXTURES.md §1.3)
 # ---------------------------------------------------------------------------

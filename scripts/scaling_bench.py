@@ -674,6 +674,15 @@ oversubscription), so this pair measures the machine, not the engine.
                 ],
                 "median_clean_pair_efficiency": med_clean_pairs,
             }) + "\n")
+        # a 0.0 gather ceiling is a failed probe: report no ratio to it
+        gather_line = (
+            f"""; machine random-gather
+(latency/MLP) ceiling {g_ceiling:.3f}
+(engine/gather-ceiling = {min(1.0, eff / g_ceiling):.3f} — the fair
+comparator for the replay's shuffle/sort/hash-bound phases)"""
+            if g_ceiling > 0
+            else ""
+        )
         latest_extra = f"""
 ## Latest run ({stamp}) — best of {args.trials} interleaved pairs
 
@@ -688,10 +697,7 @@ per-pair (probe ratio, Mops, clean, order):
 {[(p[3]["ratio"], p[3]["mops"], p[3]["clean"], p[4]) for p in pairs]};
 median of this run's probe-clean pairs {med_clean_pairs}; machine
 pure-compute ceiling this session {ceiling:.3f}
-(engine/ceiling = {min(1.0, eff / ceiling):.3f}); machine random-gather
-(latency/MLP) ceiling {g_ceiling:.3f}
-(engine/gather-ceiling = {min(1.0, eff / g_ceiling):.3f} — the fair
-comparator for the replay's shuffle/sort/hash-bound phases).
+(engine/ceiling = {min(1.0, eff / ceiling):.3f}){gather_line}.
 
 Raw JSON:
 ```json

@@ -225,3 +225,16 @@ def test_classify_stamped_run_degraded_by_causal_bandwidth_floor():
     assert {h["stamp"] for h in clean} == {"u0", "u1"}
     assert {h["stamp"] for h in degraded} == {"u2"}
     assert any("bandwidth floor" in r for r in degraded[0]["degraded_reasons"])
+
+
+def test_gather_ceiling_is_zero_when_gather_rate_reads_zero(monkeypatch):
+    """A probe whose timed tasks all hit cold pool workers reads 0.0;
+    the ceiling must report 0.0, not divide by it."""
+    import etl_spark.benchref as br
+
+    monkeypatch.setattr(br, "gather_rate", lambda workers, mb=256: 0.0)
+    assert br.gather_ceiling(2) == 0.0
+    monkeypatch.setattr(
+        br, "gather_rate", lambda workers, mb=256: 0.0 if workers == 2 else 9.0
+    )
+    assert br.gather_ceiling(2) == 0.0

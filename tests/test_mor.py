@@ -513,30 +513,3 @@ def test_targeted_fold_splits_partial_delta(spark, tmp_path):
     mor.compact()
     assert mor.snapshot().delta_files == []
     assert sorted(map(tuple, mor.read().select(*STATE).collect())) == state
-
-
-def test_expected_rows_hint_is_result_invariant(spark, tmp_path):
-    """The size hint is accepted for caller compatibility and is inert
-    (the overlapped-stats scheduling it once drove was removed after the
-    concurrent-AQE hang): with a hint, a wrong hint, and no hint, the
-    committed state and manifests must be identical."""
-    tables = {}
-    for name, hints in {
-        "nohint": [None, None, None],
-        "hint": [200, 200, 200],
-        "wrong": [1, 10_000_000, 3],
-    }.items():
-        t = LakeTable.create(
-            spark, str(tmp_path / name), n_buckets=4, salt=2,
-            write_mode="auto", mor_compact_ratio=100.0,
-            mor_max_delta_files=1000,
-        )
-        for i, b in enumerate(_batches(spark)):
-            t.apply_batch(canonicalize(b), i, expected_rows=hints[i % 3])
-        tables[name] = t
-    _same_state(tables["nohint"].read(), tables["hint"].read())
-    _same_state(tables["nohint"].read(), tables["wrong"].read())
-    for name in ("hint", "wrong"):
-        assert len(tables[name].snapshot().delta_files) == len(
-            tables["nohint"].snapshot().delta_files
-        )

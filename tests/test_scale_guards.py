@@ -210,10 +210,12 @@ def test_placement_tokens_land_exact(spark):
         assert all(got[toks[i]] == i for i in range(n)), n
 
 
-def test_slice_parallelism_floor():
+def test_slice_parallelism_floor(spark):
     """min_parallel slices the largest buckets first and respects the
     16MB small-file floor."""
-    t = LakeTable.__new__(LakeTable)  # driver-only helper, no session
+    # driver-only helper, no table; its Column expressions still need
+    # the session's SparkContext (hence the fixture)
+    t = LakeTable.__new__(LakeTable)
     bb = {0: 100 << 20, 1: 40 << 20, 2: 10 << 20}
     _, extra, ks = LakeTable._file_slice_expr(
         t, bb, max_bytes=512 << 20, min_parallel=6
