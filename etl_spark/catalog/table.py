@@ -22,8 +22,11 @@ Merge strategies (auto-selected per batch)
   slice is LEFT-joined against the broadcast delta (NO shuffle of the
   big side; one full scan + one key-column-only scan), new keys appended.
 - ``shuffle`` (delta large — backfills/initial load): target slice and
-  delta are unioned as pseudo-events and reduced with one ``max_by``
-  hash aggregation (map-side partial agg collapses hot keys pre-shuffle).
+  delta go straight into the rewrite kernel.
+Either way every rewritten file comes out of ONE kernel
+(``_latest_rows``): one placement shuffle, then keep the latest row per
+key in the sort the writer consumes.  Compaction and delta folds use the
+same kernel.
 
 Scale notes (100 TB / 1000 executors): the only per-batch driver state is
 the manifest (file entries) and the watermark vector.  Steady-state file
@@ -63,6 +66,29 @@ from etl_spark.schemas import (
 # event-envelope columns that never become table columns
 ENVELOPE_COLUMNS = {"seq", "part_id", "op", "ts", "extra"}
 SYSTEM = {"_ingest_seq", "_batch_id", "_deleted", "bucket"}
+
+
+def _keep_latest(df: DataFrame, *placement: str) -> DataFrame:
+    """The one last-write-wins order: per key, keep the row with the
+    highest ``_ingest_seq``; a seq tie keeps the lowest ``_batch_id``
+    (the earliest-applied batch — idempotent re-delivery, and one winner
+    even if a producer emitted distinct payloads under one seq).  Reads,
+    the changelog, merges and compaction all resolve through here.
+
+    ``placement`` columns (pure functions of the key) lead the window
+    partitioning so the window reuses a shuffle already laid out on
+    them.  Spark plans the ``row_number() == 1`` filter as a
+    ``WindowGroupLimit``."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*placement, *KEY_COLUMNS).orderBy(
+        F.desc("_ingest_seq"), F.asc("_batch_id")
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def _apply_props(props: dict, updates: dict | None) -> None:
@@ -265,19 +291,13 @@ class LakeTable:
         snap: Snapshot,
         base_entries: list[FileEntry],
         delta_entries: list[FileEntry],
-        delta_filter=None,
     ) -> DataFrame:
         """Effective table rows (incl. tombstones) under merge-on-read:
         base rows are unique per key; pending delta files may hold newer
-        versions — one LWW window by key over (_ingest_seq DESC,
-        _batch_id ASC) resolves them.  The ASC tie-break mirrors the
-        copy-on-write merges, which keep the TARGET row on equal seq
-        (idempotent re-delivery): the earliest-applied batch wins a seq
-        tie everywhere, so MoR reads, CoW merges, and compaction share
-        ONE LWW semantics even if a producer ever emitted distinct
-        payloads under one seq (ADVICE r3).  With no pending deltas this
-        is a plain scan (zero extra shuffle — the copy-on-write fast
-        path).
+        versions — ``_keep_latest`` resolves them, the same order the
+        copy-on-write merges and compaction use.  With no pending deltas
+        this is a plain scan (zero extra shuffle — the copy-on-write
+        fast path).
 
         Scale: the window runs ONLY over base files in delta-touched
         buckets; every other base file bypasses it as a plain scan
@@ -285,30 +305,12 @@ class LakeTable:
         key shuffle of the whole table."""
         if not delta_entries:
             return self._read_files(snap, base_entries)
-        from pyspark.sql import Window
-
         delta_buckets = {b for e in delta_entries for b in e.buckets}
         touched = [e for e in base_entries if set(e.buckets) & delta_buckets]
         untouched = [
             e for e in base_entries if not (set(e.buckets) & delta_buckets)
         ]
-        dread = self._read_files(snap, delta_entries)
-        if delta_filter is not None:
-            # targeted compaction folds only the selected buckets' delta
-            # rows out of a multi-bucket delta file; the caller rewrites
-            # the remainder as a leftover delta (bucket is derivable from
-            # repo + the snapshot layout, so the filter is a data-column
-            # expression — no layout assumption on the file)
-            dread = dread.filter(delta_filter)
-        u = self._read_files(snap, touched).unionByName(dread)
-        w = Window.partitionBy(*KEY_COLUMNS).orderBy(
-            F.desc("_ingest_seq"), F.asc("_batch_id")
-        )
-        resolved = (
-            u.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        resolved = _keep_latest(self._read_files(snap, touched + delta_entries))
         if not untouched:
             return resolved
         return self._read_files(snap, untouched).unionByName(resolved)
@@ -601,10 +603,7 @@ class LakeTable:
             # separate-histogram job as the exact fallback.
             bucket_ids = self._bucket_id_space(new_snap)
             to_write = d
-            if (
-                len(bucket_ids) <= 64
-                and os.environ.get("ETL_SPARK_WRITE_OBSERVE", "1") != "0"
-            ):
+            if len(bucket_ids) <= 64:
                 from pyspark.sql import Observation
 
                 per_row = self._row_bytes_expr(d)
@@ -782,11 +781,11 @@ class LakeTable:
         )
         npart = max(1, min(len(touched) + extra_parts, 2048))
         # collision-free (bucket, slice) -> partition placement: even
-        # writer waves + the single-shuffle fused merge below.  Promotion
-        # batches fall back to hash partitioning (same gate as above).
-        tok_expr, tok_npart = (
+        # writer waves.  Promotion batches fall back to hash partitioning
+        # (same gate as above).
+        tok = (
             self._placement_expr(sorted(touched), slice_ks)
-            if not promoted and os.environ.get("ETL_SPARK_EXACT_PLACEMENT", "1") != "0"
+            if not promoted
             else (None, 0)
         )
         new_entries = None
@@ -804,7 +803,6 @@ class LakeTable:
         small_delta_bytes = int(
             snap.properties.get("mor_small_delta_bytes", str(64 << 20))
         )
-        fused = None
         if use_mor and delta_bytes <= small_delta_bytes and not migrate_buckets:
             strategy = "mor-delta"
             rel_dir = os.path.join(
@@ -817,70 +815,32 @@ class LakeTable:
             tp = mark("scan_written", tp)
         elif use_mor:
             strategy = "mor-delta"
-            merged = delta_rows
+            inputs = [delta_rows]
             rel_dir = os.path.join(
                 "data", f"d{batch_id:08d}-{uuid.uuid4().hex[:8]}"
             )
         else:
-            # copy-on-write: the touched slice (base files PLUS any
-            # pending delta files in those buckets, LWW-pre-resolved so
-            # the merge sees one row per key) is rewritten
-            # read at the batch's columns: files older than a column
-            # promoted now read it as null
-            slice_df = (
-                self._resolve(new_snap, slice_base, slice_delta)
-                if (slice_base or slice_delta)
-                else None
-            )
-            if slice_df is None:
-                merged = delta_rows
-            elif strategy == "broadcast":
-                resolved, news = self._merge_broadcast(
-                    slice_df, staged, delta_rows, all_cols, batch_id
+            # copy-on-write: the touched slice — base files PLUS any
+            # pending delta files in those buckets, read unresolved at
+            # the batch's columns (files older than a column promoted now
+            # read it as null) — is rewritten with the batch's rows; the
+            # kernel keeps the latest row per key
+            inputs = [delta_rows]
+            if slice_base or slice_delta:
+                slice_df = self._read_files(new_snap, slice_base + slice_delta)
+                inputs = (
+                    [self._merge_broadcast(slice_df, staged, delta_rows, all_cols)]
+                    if strategy == "broadcast"
+                    else [slice_df, delta_rows]
                 )
-                merged = resolved.unionByName(news)
-            elif (
-                tok_expr is not None
-                and os.environ.get("ETL_SPARK_FUSED_MERGE", "1") != "0"
-            ):
-                # single-shuffle LWW merge: dedup runs under the writer's
-                # own (bucket, slice) partitioning instead of a separate
-                # key-hash shuffle + second sort (see _merge_fused)
-                strategy = "shuffle-fused"
-                fused = self._merge_fused(
-                    slice_df, delta_rows, all_cols, bexpr, slice_expr,
-                    tok_expr, tok_npart,
-                )
-            else:
-                merged = self._merge_shuffle(slice_df, delta_rows, all_cols)
             rel_dir = os.path.join(
                 "data", f"b{batch_id:08d}-{uuid.uuid4().hex[:8]}"
             )
 
         if new_entries is None:
-            if fused is not None:
-                # _merge_fused output is already exact-placed, key-sorted
-                # within single-(bucket, slice) partitions, and deduped —
-                # the write consumes it directly (no second shuffle/sort)
-                merged = fused
-            else:
-                merged = merged.withColumn("bucket", bexpr).withColumn(
-                    "_slice", slice_expr
-                )
-                if tok_expr is not None:
-                    # exact placement even for non-fused shapes
-                    # (broadcast-merge output, big-MoR deltas): one
-                    # (bucket, slice) group per partition — even waves
-                    merged = (
-                        merged.withColumn("_tok", tok_expr)
-                        .repartition(tok_npart, "_tok")
-                        .drop("_tok")
-                    )
-                else:
-                    merged = merged.repartition(npart, "bucket", "_slice")
-                merged = merged.sortWithinPartitions("repo", "path").drop(
-                    "_slice"
-                )
+            merged = self._latest_rows(
+                inputs, all_cols, bexpr, slice_expr, tok, npart
+            )
 
             # -- write new data files --------------------------------------
             # Manifest stats are observed DURING the write job (one pass
@@ -898,15 +858,7 @@ class LakeTable:
             # anyway).
             obs = None
             obs_buckets = sorted(touched)
-            # ETL_SPARK_WRITE_OBSERVE=0: diagnostic kill-switch for the
-            # observe-stats ride-along (falls back to the post-write
-            # scan) — used to attribute merge-phase cost during profiling
-            if (
-                extra_parts == 0
-                and not promoted
-                and len(obs_buckets) <= 64
-                and os.environ.get("ETL_SPARK_WRITE_OBSERVE", "1") != "0"
-            ):
+            if extra_parts == 0 and not promoted and len(obs_buckets) <= 64:
                 from pyspark.sql import Observation
 
                 obs = Observation()
@@ -1043,7 +995,7 @@ class LakeTable:
 
     def _merge_broadcast(
         self, slice_df: DataFrame, d: DataFrame, delta_rows: DataFrame,
-        all_cols: list[str], batch_id: int,
+        all_cols: list[str],
     ) -> DataFrame:
         """Steady-state path: NO shuffle of the target slice.
 
@@ -1052,7 +1004,10 @@ class LakeTable:
            idempotent re-delivery).
         2. key-column-only scan of the slice semi-joined to delta ->
            matched keys (small) -> anti-join gives brand-new keys.
-        """
+
+        ``slice_df`` may hold several rows per key (base plus unresolved
+        pending deltas): each is resolved against the batch on its own,
+        and the rewrite kernel keeps the latest."""
         dr = delta_rows.select(
             *KEY_COLUMNS,
             *[F.col(c).alias(f"_d_{c}") for c in all_cols if c not in KEY_COLUMNS],
@@ -1074,7 +1029,7 @@ class LakeTable:
             F.broadcast(d.select(*KEY_COLUMNS)), KEY_COLUMNS, "left_semi"
         )
         news = delta_rows.join(F.broadcast(matched), KEY_COLUMNS, "left_anti")
-        return resolved, news
+        return resolved.unionByName(news)
 
     @staticmethod
     def _placement_expr(buckets: list[int], ks: dict[int, int]):
@@ -1089,8 +1044,7 @@ class LakeTable:
         8-core scaling leg (uneven write waves) while 2 cores ran
         saturated.  ``placement_tokens`` inverts Spark's hash so the
         repartition lands exactly one group per partition: even waves,
-        every file written by its own task, and the fused merge's window
-        sees one (bucket, slice) group per partition."""
+        every file written by its own task."""
         from etl_spark.functions.murmur import placement_tokens
 
         pairs = [(b, s) for b in sorted(buckets) for s in range(ks.get(b, 1))]
@@ -1106,85 +1060,57 @@ class LakeTable:
         )
         return F.element_at(F.create_map(*kv), key).cast("int"), len(pairs)
 
-    def _merge_fused(
+    def _latest_rows(
         self,
-        slice_df: DataFrame,
-        delta_rows: DataFrame,
-        all_cols: list[str],
-        bexpr,
+        inputs: list[DataFrame],
+        cols: list[str],
+        bucket,
         slice_expr,
-        tok_expr,
+        tok: tuple,
         npart: int,
     ) -> DataFrame:
-        """Single-shuffle copy-on-write merge (backfill path).
+        """The one rewrite kernel: every copy-on-write merge, big
+        merge-on-read delta, compaction and delta fold writes through it.
 
-        ``_merge_shuffle`` + the writer relayout cost TWO full shuffles
-        and two sorts of the merged slice: a key-hash shuffle for the
-        LWW window, then ``repartition(bucket, _slice)`` + a second sort
-        for the bucket-clustered write.  But bucket and slice are pure
-        functions of the key columns, so rows of one key already
-        co-locate under the WRITER'S partitioning — the LWW can run
-        there: union -> one exact-placed repartition on the
-        (bucket, slice) token -> per-partition sort by (key, _ingest_seq
-        DESC, _src DESC) -> keep each key run's FIRST row (window lag
-        over the same sort: zero extra exchange, zero extra sort).
-        Winner semantics are identical to ``_merge_shuffle`` (highest
-        seq; seq tie keeps the target row — idempotent re-delivery), and
-        the surviving rows leave sorted by key within single-group
-        partitions, which is exactly the layout the write wants.
-        Measured (8-core leg, 1.2M-event batch): 24.5s -> 9.9s for the
-        merge+layout stage; the 2-core leg moves 19.6s -> 17.1s, so the
-        fusion directly lifts N->4N scaling efficiency, not just
-        absolute throughput.  Window buffers hold one (bucket, slice)
-        group (~max_file_bytes worst case); spill thresholds sized in
-        config.spark_conf."""
-        from pyspark.sql import Window
+        Unions ``inputs`` (base slice, pending deltas, the batch's rows —
+        whichever the caller has), adds ``bucket`` and ``_slice``, and
+        shuffles ONCE: on the exact ``_placement_expr`` token ``tok``
+        when there is one, else hash on (bucket, _slice) into ``npart``
+        partitions.  Bucket and slice are pure functions of the key, so
+        every row of a key is already in one partition: ``_keep_latest``
+        runs there with the placement columns leading its window, and
+        the final sort is the window's own sort (placement, then key),
+        which is also the writer's order — no second exchange or sort.
 
-        t = slice_df.withColumn("_src", F.lit(1))
-        dd = delta_rows.withColumn("_src", F.lit(0))
-        u = t.unionByName(dd)
-        u = (
-            u.withColumn("bucket", bexpr)
-            .withColumn("_slice", slice_expr)
-            .withColumn("_tok", tok_expr)
-            .repartition(npart, "_tok")
-        )
-        w = Window.partitionBy("_tok").orderBy(
-            *KEY_COLUMNS, F.desc("_ingest_seq"), F.desc("_src")
-        )
-        lags = [
-            F.lag(c).over(w).eqNullSafe(F.col(c)) for c in KEY_COLUMNS
-        ]
-        same_key = lags[0]
-        for lg in lags[1:]:
-            same_key = same_key & lg
+        The first row per key is kept even for one input that is
+        already key-unique (a fresh table's first write, broadcast-merge
+        output, a big delta), so there is one code path.
+
+        ``_batch_id`` ASC is the right tie-break for merges too:
+        ``apply_batch`` fences every ``batch_id <= last_batch_id``,
+        rollback restores the manifest and the fence together, and
+        compaction keeps each row's ``_batch_id`` — so every row already
+        in the table has a lower ``_batch_id`` than the incoming batch,
+        and "the target row wins a seq tie" is exactly ``_batch_id`` ASC.
+        """
+        u = inputs[0]
+        for df in inputs[1:]:
+            u = u.unionByName(df)
+        u = u.withColumn("bucket", bucket).withColumn("_slice", slice_expr)
+        tok_expr, tok_npart = tok
+        if tok_expr is not None:
+            # bucket and _slice lead so the output is ordered by the
+            # writer's partition column; _tok makes the window's
+            # clustering a superset of the shuffle's
+            place = ["bucket", "_slice", "_tok"]
+            u = u.withColumn("_tok", tok_expr).repartition(tok_npart, "_tok")
+        else:
+            place = ["bucket", "_slice"]
+            u = u.repartition(npart, *place)
         return (
-            u.withColumn("_rn", F.row_number().over(w))
-            .withColumn("_same", same_key)
-            .filter((F.col("_rn") == 1) | ~F.col("_same"))
-            .select(*all_cols, "bucket")
-        )
-
-    def _merge_shuffle(
-        self, slice_df: DataFrame, delta_rows: DataFrame, all_cols: list[str]
-    ) -> DataFrame:
-        """Backfill path: window LWW over target ∪ delta — one shuffle by
-        key, sort-based (no per-key row-struct buffering: a max_by
-        hash-agg was measured to anti-scale on wide rows at high core
-        counts).  Order key (_ingest_seq DESC, _src DESC) keeps the
-        target row on seq ties (idempotent re-delivery)."""
-        from pyspark.sql import Window
-
-        t = slice_df.withColumn("_src", F.lit(1))
-        dd = delta_rows.withColumn("_src", F.lit(0))
-        u = t.unionByName(dd)
-        w = Window.partitionBy(*KEY_COLUMNS).orderBy(
-            F.desc("_ingest_seq"), F.desc("_src")
-        )
-        return (
-            u.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*all_cols)
+            _keep_latest(u, *place)
+            .sortWithinPartitions(*place, *KEY_COLUMNS)
+            .select(*cols, "bucket")
         )
 
     # ------------------------------------------------------------------ #
@@ -1786,30 +1712,14 @@ class LakeTable:
             # Unchanged keys resolve identically on both sides and are
             # suppressed by the _ingest_seq equality below; cost is still
             # proportional to touched buckets, never table size.
-            from pyspark.sql import Window
-
             touched = {b for e in diff_a + diff_b for b in e.buckets}
             context = [
                 e
                 for e in files_a
                 if e.path in paths_b and set(e.buckets) & touched
             ]
-            # same (seq DESC, batch ASC) order as _resolve: one LWW
-            # semantics across reads, merges, changelog, compaction
-            w = Window.partitionBy(*KEY_COLUMNS).orderBy(
-                F.desc("_ingest_seq"), F.asc("_batch_id")
-            )
-
-            def eff(entries):
-                return (
-                    self._read_files(snap_b, entries)
-                    .withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-
-            old = eff(diff_a + context)
-            new = eff(diff_b + context)
+            old = _keep_latest(self._read_files(snap_b, diff_a + context))
+            new = _keep_latest(self._read_files(snap_b, diff_b + context))
         else:
             # pure copy-on-write: whole-bucket rewrites guarantee a key's
             # old and new images are either both in the diff sets or both
@@ -2156,17 +2066,19 @@ class LakeTable:
         # whole: folding their out-of-set rows would emit those rows as
         # new base rows while the same buckets' old base files are
         # carried — duplicate keys in the base set.  The selected buckets'
-        # rows fold below (delta_filter); the remainder is rewritten as a
-        # single fresh leftover delta file, which also collapses the
-        # partial files' pending chain into one file as a side effect.
-        delta_filter = None
+        # rows fold below (a filter on the bucket derived from repo + the
+        # snapshot layout — no layout assumption on the file); the
+        # remainder is rewritten as a single fresh leftover delta file,
+        # which also collapses the partial files' pending chain into one
+        # file as a side effect.
+        dread = self._read_files(snap, sel_delta)
         leftover_entries: list[FileEntry] = []
         if buckets is not None:
             bexpr_old = self._bucket_expr(snap)  # layout unchanged here
             in_sel = bexpr_old.isin(*sorted(set(buckets)))
             partial = [e for e in sel_delta if set(e.buckets) - set(buckets)]
             if partial:
-                delta_filter = in_sel
+                dread = dread.filter(in_sel)
                 lrel = os.path.join(
                     "data", f"dleft-{uuid.uuid4().hex[:8]}"
                 )
@@ -2184,9 +2096,6 @@ class LakeTable:
                         os.path.join(self.root, lrel), ignore_errors=True
                     )
                     leftover_entries = []
-        df = self._resolve(
-            snap, sel_base, sel_delta, delta_filter=delta_filter
-        ).withColumn("bucket", self._bucket_expr(new_snap))
         n_out = (
             max(1, len({b for e in sel_base + sel_delta for b in e.buckets}))
             if n_buckets is None
@@ -2224,20 +2133,16 @@ class LakeTable:
             cks = {b: k for b in comp_buckets} if k > 1 else {}
         # collision-free (bucket, slice) placement for the rewrite
         # (same rationale as the merge writer: even task waves)
-        tok_expr, tok_npart = self._placement_expr(comp_buckets, cks)
         rel_dir = os.path.join("data", f"compact-{uuid.uuid4().hex[:8]}")
-        out = df.withColumn("_slice", slice_expr)
-        if tok_expr is not None:
-            out = (
-                out.withColumn("_tok", tok_expr)
-                .repartition(tok_npart, "_tok")
-                .drop("_tok")
-            )
-        else:
-            out = out.repartition(n_out + extra, "bucket", "_slice")
         (
-            out.sortWithinPartitions("repo", "path")
-            .drop("_slice")
+            self._latest_rows(
+                [self._read_files(snap, sel_base), dread],
+                snap.columns,
+                self._bucket_expr(new_snap),
+                slice_expr,
+                self._placement_expr(comp_buckets, cks),
+                n_out + extra,
+            )
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(os.path.join(self.root, rel_dir))

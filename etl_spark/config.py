@@ -39,13 +39,6 @@ def spark_conf(cores: int | None = None, shuffle_partitions: int | None = None) 
         "spark.sql.files.maxPartitionBytes": "33554432",
         "spark.hadoop.parquet.block.size": str(16 * 1024 * 1024),
         "spark.sql.parquet.compression.codec": "snappy",
-        # the fused single-shuffle merge runs its LWW window over one
-        # (bucket, slice) group per partition — up to ~max_file_bytes of
-        # rows buffered per task.  The 4096-row defaults would spill
-        # every group; raise the in-memory handoff and let the task
-        # memory manager (not a row count) decide when to spill.
-        "spark.sql.windowExec.buffer.in.memory.threshold": "32768",
-        "spark.sql.windowExec.buffer.spill.threshold": "2097152",
         # deterministic: never infer schemas off sampled data
         "spark.sql.streaming.schemaInference": "false",
         "spark.ui.enabled": "false",

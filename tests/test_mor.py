@@ -8,6 +8,7 @@ merge work happens (read-time vs write-time), never the result.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.catalog.table import LakeTable
@@ -297,36 +298,52 @@ def test_mor_vacuum_keeps_pending_delta_files(spark, tmp_path):
     )
 
 
-def test_seq_tie_resolution_matches_cow(spark, tmp_path):
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
+def test_seq_tie_resolution_matches_cow(spark, tmp_path, strategy):
     """ADVICE r3: a producer violating seq uniqueness (same seq, distinct
     payloads, delivered in different batches) must resolve to the SAME
-    winner under MoR read-time resolution, CoW merge, and compaction:
-    the earliest-applied batch keeps the row (idempotent-redelivery
-    semantics generalized)."""
+    winner under MoR read-time resolution, CoW merge, a CoW batch that
+    folds the pending tied delta, and compaction: the earliest-applied
+    batch keeps the row (idempotent-redelivery semantics generalized)."""
     rows_a = [(100, 0, "insert", "r1", "src/a.py", "c1", None, "first payload")]
     rows_b = [(100, 0, "insert", "r1", "src/a.py", "c2", None, "second payload")]
+    # another key of the same (cold, repo-hashed) bucket
+    rows_c = [(101, 0, "insert", "r1", "src/b.py", "c3", None, "third payload")]
     schema = ("seq long, part_id int, op string, repo string, path string, "
               "commit string, lang string, content string")
 
-    def mk(mode):
+    def batch(rows):
+        return spark.createDataFrame(rows, schema).withColumn(
+            "ts", F.timestamp_seconds(F.lit(1767225600))
+        ).withColumn("extra", F.lit(None).cast("map<string,string>"))
+
+    def mk(mode, tag=""):
         t = LakeTable.create(
-            spark, str(tmp_path / f"t_{mode}"), n_buckets=2, write_mode=mode,
+            spark, str(tmp_path / f"t_{mode}{tag}"), n_buckets=2, write_mode=mode,
             mor_compact_ratio=100.0,  # keep the delta pending for the test
         )
         for bid, rows in enumerate([rows_a, rows_b]):
-            b = spark.createDataFrame(rows, schema).withColumn(
-                "ts", F.timestamp_seconds(F.lit(1767225600))
-            ).withColumn("extra", F.lit(None).cast("map<string,string>"))
-            t.apply_batch(b, bid, delivery="unordered", canonicalizer=canonicalize)
+            t.apply_batch(batch(rows), bid, delivery="unordered",
+                          canonicalizer=canonicalize, strategy=strategy)
         return t
+
+    def commit_of(t, path="src/a.py"):
+        return t.read().filter(F.col("path") == path).first()["commit"]
 
     cow, mor = mk("cow"), mk("mor")
     assert mor.snapshot().delta_files, "MoR table must actually hold deltas"
-    got_cow = cow.read().select("commit").first()["commit"]
-    got_mor = mor.read().select("commit").first()["commit"]
-    assert got_cow == got_mor == "c1"  # earliest batch wins the tie everywhere
+    assert commit_of(cow) == commit_of(mor) == "c1"  # earliest batch wins
+
+    fold = mk("mor", "_fold")
+    st = fold.apply_batch(batch(rows_c), 2, delivery="unordered",
+                          canonicalizer=canonicalize, strategy=strategy,
+                          mode="cow")
+    assert st["mode"] == "cow" and st["strategy"] == strategy
+    assert not fold.snapshot().delta_files, "the CoW batch must fold the delta"
+    assert commit_of(fold) == "c1" and commit_of(fold, "src/b.py") == "c3"
+
     mor.compact()
-    assert mor.read().select("commit").first()["commit"] == "c1"
+    assert commit_of(mor) == "c1"
 
 
 def test_auto_amplification_is_row_based(spark, tmp_path):

@@ -185,9 +185,28 @@ def test_unordered_delete_then_late_upsert(spark, tmp_path):
 
 @pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
 def test_merge_strategies_agree(spark, tmp_path, strategy):
+    """Both merge strategies reach the oracle state, for in-order halves
+    and for out-of-order, re-delivered and seq-tied batches (every
+    batch after the first merges through the rewrite kernel)."""
     ev = events_df(spark, 700, n_repos=6, paths_per_repo=15)
     t = LakeTable.create(spark, str(tmp_path / f"lake-{strategy}"), n_buckets=4, salt=2)
     for b, (lo, hi) in enumerate([(0, 350), (350, 700)]):
         chunk = ev.filter((F.col("seq") >= lo) & (F.col("seq") < hi))
         t.apply_batch(canonicalize(chunk), b, strategy=strategy)
+    _assert_state_equal(_final_state(t), replay_events(ev.toPandas()))
+
+    ev = events_df(
+        spark, 6000, seed=21, n_repos=10, paths_per_repo=40, hot_pct=20,
+        content_bytes=128,
+    )
+    batches = [
+        ev.filter("seq % 3 != 2"),
+        ev.filter("seq % 3 = 2").union(ev.limit(300)),  # out of order + redelivery
+        ev.limit(500),  # pure duplicates incl. seq ties
+    ]
+    t = LakeTable.create(spark, str(tmp_path / f"redeliver-{strategy}"), n_buckets=8, salt=4)
+    for b, chunk in enumerate(batches):
+        st = t.apply_batch(chunk, b, delivery="unordered",
+                           canonicalizer=canonicalize, strategy=strategy)
+        assert st["strategy"] == strategy, st
     _assert_state_equal(_final_state(t), replay_events(ev.toPandas()))

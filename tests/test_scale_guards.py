@@ -229,40 +229,3 @@ def test_slice_parallelism_floor(spark):
     # floor off -> no slicing below max_bytes
     _, extra0, ks0 = LakeTable._file_slice_expr(t, bb, max_bytes=512 << 20)
     assert ks0 == {} and extra0 == 0
-
-
-def test_fused_merge_matches_legacy(spark, tmp_path, monkeypatch):
-    """The single-shuffle fused merge (exact-placed repartition + window
-    LWW by adjacent keys) produces byte-identical state to the legacy
-    two-shuffle path under out-of-order + duplicated delivery."""
-    import os
-
-    ev = events_df(
-        spark, 6000, seed=21, n_repos=10, paths_per_repo=40, hot_pct=20,
-        content_bytes=128,
-    )
-    batches = [
-        ev.filter("seq % 3 != 2"),
-        ev.filter("seq % 3 = 2").union(ev.limit(300)),  # redelivery
-        ev.limit(500),  # pure duplicates incl. seq ties
-    ]
-
-    def replay(tag, fused):
-        monkeypatch.setenv("ETL_SPARK_FUSED_MERGE", "1" if fused else "0")
-        monkeypatch.setenv("ETL_SPARK_EXACT_PLACEMENT", "1" if fused else "0")
-        t = LakeTable.create(
-            spark, str(tmp_path / tag), n_buckets=8, salt=4
-        )
-        for i, b in enumerate(batches):
-            st = t.apply_batch(
-                b, i, delivery="unordered", canonicalizer=canonicalize,
-                strategy="shuffle",
-            )
-            if fused and i > 0:  # first batch has no slice -> plain write
-                assert st.get("strategy") == "shuffle-fused", st
-        return t
-
-    a = replay("fused", True).read()
-    b = replay("legacy", False).read()
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
