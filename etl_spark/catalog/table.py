@@ -1058,6 +1058,12 @@ class LakeTable:
             F.col("bucket").cast("long") * F.lit(1 << 20)
             + F.col("_slice").cast("long")
         )
+        # element_at over a literal map is a linear scan of its keys per
+        # row (Spark map literals have no hashed lookup), so up to 2048
+        # comparisons at the cap.  Group counts are buckets x slices: a
+        # 16-bucket table with the parallelism floor's few slices per
+        # bucket is tens of groups, a small cost next to the
+        # KB-wide row's shuffle write it feeds.
         return F.element_at(F.create_map(*kv), key).cast("int"), len(pairs)
 
     def _latest_rows(

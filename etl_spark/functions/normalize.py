@@ -9,94 +9,77 @@ cross-checked by tests):
    ends with exactly one ``\\n``; content that normalizes to empty stays ""
 4. unicode NFC normalization
 
-Steps 1–3 are regex-free JVM-side string expressions (literal replace,
-split/rtrim/join; whole-stage codegen, zero Python — see
-``normalize_lines``).  Step 4 (NFC) has no Spark builtin, so it runs as
-a vectorized Arrow ``pandas_udf`` — the only Python hop in the
-pipeline.  The ASCII fast path is gated INSIDE the UDF (one vectorized
-regex scan per Arrow batch; pure-ASCII rows — the overwhelming majority
-of source code — pass through untouched).  A JVM-side
-``when(rlike).otherwise`` gate was measured SLOWER: Spark evaluates the
-UDF column for all rows regardless, and the otherwise-branch duplicates
-the whole normalization chain.
+All four steps run in ONE Arrow crossing: a PySpark ``arrow_udf`` that
+takes the content column as a ``pa.Array`` and returns one.  NFC has no
+Spark builtin, so content must reach Python anyway; once every row
+crosses, the cheapest place for steps 1-3 is the same crossing, in
+Arrow's C++ kernels.  The JVM alternative (literal ``replace`` plus
+``split`` / ``transform(rtrim)`` / ``array_join``) allocated an array
+per dirty row and cost ~70% of canonicalize.
+
+- Steps 1-3 are ``pyarrow.compute`` kernels.  The two regex passes run
+  on RE2, which is linear-time and allocates no per-match state, unlike
+  Java's ``regexp_replace``.
+- Step 4 runs only on rows with non-ASCII bytes (``string_is_ascii``;
+  ASCII is NFC-invariant).  Those rows go through ``unicodedata`` and
+  are scattered back with ``replace_with_mask``.
+  ``pc.utf8_normalize`` is NOT used: in pyarrow 16.1 it returns NFD
+  input unchanged (``utf8_normalize(NFD("café"), "NFC")`` keeps 5
+  code points).  A test pins this with NFD inputs built at run time.
 
 Per-row Python UDFs are banned engine-wide (BASELINE.json:15); a
-plan-shape test asserts no BatchEvalPython node ever appears.
+plan-shape test asserts one ArrowEvalPython node and no BatchEvalPython.
 """
 
 from __future__ import annotations
 
 import unicodedata
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import StringType
 
 
-@pandas_udf(StringType())
-def nfc_udf(s: pd.Series) -> pd.Series:
-    """Vectorized NFC normalization (nulls propagate).
-
-    ASCII rows are NFC-invariant and skipped: one C-level regex scan
-    finds the rows with non-ASCII bytes, ``unicodedata`` runs only on
-    those."""
-    mask = s.str.contains("[^\x00-\x7f]", regex=True, na=False)
-    if not mask.any():
-        return s
-    out = s.copy()
-    out[mask] = s[mask].str.normalize("NFC")
-    return out
-
-
-def normalize_lines(col: Column) -> Column:
-    """Steps 1-3: JVM-side pipeline, ZERO regex (stays in codegen).
-
-    Java regexp_replace was the single hottest expression in the whole
-    engine: each match allocates Matcher/StringBuffer state and copies
-    the full content -- measured ~190us/row of CPU for one pass over
-    2KB/45-line rows (the 4-pass chain was ~70% of canonicalize).
-    Literal char operations compute the identical result:
-
-    1. CRLF/CR -> LF: two LITERAL ``replace`` passes (memchr-speed):
-       "\\r\\n" -> "\\n", then any remaining lone "\\r" -> "\\n".
-    2. per-line trailing-[space,tab] strip: split on "\\n" (single-char
-       pattern), ``rtrim`` each line (backward char scan), rejoin.
-       Gated on ``contains(" \\n") | contains("\\t\\n")`` -- rows with
-       no mid-content trailing whitespace (the overwhelming majority of
-       real source code) skip the split/join allocation entirely; the
-       end-of-string run is handled by the unconditional rtrim below.
-    3. trailing-newline collapse + final-newline policy: ``rtrim`` of
-       " \\t" then "\\n" from the end, then append exactly one
-       "\\n" to non-empty content.
-
-    Measured 2x faster than the fused single-regex variant on all-dirty
-    fixture rows (8.5s vs 16.6s for 590k x 2KB at 8 cores) and
-    value-identical on that whole set; the gate makes clean rows nearly
-    free.  Semantics are pinned by the Python-twin equality tests, the
-    hypothesis property suite, and the DuckDB oracle's independent SQL
-    normalization."""
-    c = F.replace(col, F.lit("\r\n"), F.lit("\n"))
-    c = F.replace(c, F.lit("\r"), F.lit("\n"))
-    stripped = F.array_join(
-        F.transform(F.split(c, "\n", -1), lambda x: F.rtrim(x, F.lit(" \t"))),
-        "\n",
+def _canonical_lines(a: pa.Array) -> pa.Array:
+    """Steps 1-3 on an Arrow string array (nulls propagate)."""
+    a = pc.replace_substring(a, "\r\n", "\n")
+    a = pc.replace_substring(a, "\r", "\n")
+    a = pc.replace_substring_regex(a, r"[ \t]+\n", "\n")
+    # after the pass above no [ \t] precedes a "\n", so the end run is
+    # \n*[ \t]*: the twin's two end strips in one pass
+    a = pc.replace_substring_regex(a, r"[ \t\n]+$", "")
+    return pc.if_else(
+        pc.greater(pc.binary_length(a), 0),
+        pc.binary_join_element_wise(a, "\n", ""),
+        a,
     )
-    c = F.when(
-        F.contains(c, F.lit(" \n")) | F.contains(c, F.lit("\t\n")), stripped
-    ).otherwise(c)
-    c = F.rtrim(c, F.lit(" \t"))
-    c = F.rtrim(c, F.lit("\n"))
-    return F.when(F.length(c) > 0, F.concat(c, F.lit("\n"))).otherwise(c)
+
+
+def _nfc(a: pa.Array) -> pa.Array:
+    """Step 4: NFC on the non-ASCII rows only (nulls propagate)."""
+    mask = pc.invert(pc.fill_null(pc.string_is_ascii(a), True))
+    if not pc.any(mask).as_py():
+        return a
+    fixed = [unicodedata.normalize("NFC", s) for s in pc.filter(a, mask).to_pylist()]
+    return pc.replace_with_mask(a, mask, pa.array(fixed, a.type))
+
+
+@arrow_udf(StringType())
+def _normalize_nfc(a: pa.Array) -> pa.Array:
+    return _nfc(_canonical_lines(a))
+
+
+@arrow_udf(StringType())
+def _normalize_no_nfc(a: pa.Array) -> pa.Array:
+    return _canonical_lines(a)
 
 
 def normalize_content(col: Column, nfc: bool = True) -> Column:
-    """Full normalization of a content column (null-safe: null -> null)."""
-    c = normalize_lines(col)
-    if nfc:
-        c = nfc_udf(c)
-    return c
+    """Full normalization of a content column (null-safe: null -> null).
+    ``nfc=False`` stops after step 3."""
+    return (_normalize_nfc if nfc else _normalize_no_nfc)(col)
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,8 @@
 """The row-transform pipeline: raw change events -> canonical upsert rows.
 
 canonicalize(events) applies, fully vectorized:
-  1. content normalization (regex-free JVM string ops + gated Arrow NFC
-     pandas_udf)
+  1. content normalization (one Arrow UDF: pyarrow kernels for line
+     endings and whitespace, NFC on non-ASCII rows)
   2. lang tagging (explicit > extension > shebang)
   3. sha256 fingerprint of the NORMALIZED content (the per-row invariant)
 

@@ -4,17 +4,19 @@ twins, plus the plan-shape guard (no per-row Python, BASELINE.json:15)."""
 from __future__ import annotations
 
 import hashlib
+import unicodedata
 
-import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from etl_spark.fixtures import events_df
 from etl_spark.functions.hashing import content_sha256, content_sha256_py
 from etl_spark.functions.lang import tag_lang, tag_lang_py
 from etl_spark.functions.normalize import normalize_content, normalize_content_py
-from etl_spark.plans.guard import assert_vectorized
+from etl_spark.pipeline import canonicalize
+from etl_spark.plans.guard import assert_vectorized, executed_plan_str
 
 CASES = [
     "plain\n",
@@ -69,6 +71,58 @@ def test_normalize_property(spark, texts):
     got = _spark_norm(spark, texts)
     want = [normalize_content_py(v) for v in texts]
     assert got == want
+
+
+# Weighted toward the inputs the rules act on: CRLF and lone CR, runs of
+# trailing blanks before a newline and at the end, a decomposed accent
+# (e + U+0301) and one non-BMP character.
+_HAZARDS = st.sampled_from(
+    ["\r", "\r", "\n", "\n", " ", " ", "\t", "e", "e", "\u0301", "\U0001F600"]
+)
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    st.lists(
+        st.lists(_HAZARDS, max_size=30).map("".join),
+        min_size=1,
+        max_size=20,
+    )
+)
+def test_normalize_property_hazards(spark, texts):
+    df = spark.createDataFrame([(v,) for v in texts], "content string")
+    rows = df.select(
+        normalize_content(F.col("content")).alias("n"),
+        normalize_content(F.col("content"), nfc=False).alias("lines"),
+    ).collect()
+    want = [normalize_content_py(v) for v in texts]
+    assert [r["n"] for r in rows] == want
+    assert [unicodedata.normalize("NFC", r["lines"]) for r in rows] == want
+
+
+def test_normalize_nfc_of_nfd_input(spark):
+    # pyarrow 16.1's pc.utf8_normalize(..., "NFC") returns NFD input
+    # unchanged; normalize_content must not rely on it.  The NFD inputs
+    # are built here so the file's own encoding cannot pre-compose them.
+    nfd = [
+        unicodedata.normalize("NFD", v)
+        for v in ["café\n", "Ångström  \r\nnaïve\t\n", "ñ\n\n\n"]
+    ]
+    values = nfd + [None, "", "   ", "\n", " \t\n  \n\t "]
+    got = _spark_norm(spark, values)
+    want = [normalize_content_py(v) for v in values]
+    assert got == want
+    assert got[:3] == ["caf\u00e9\n", "\u00c5ngstr\u00f6m\nna\u00efve\n", "\u00f1\n"]
+    assert got[0] != nfd[0]
+    assert want[3:] == [None, "", "", "", ""]
+
+
+@pytest.mark.parametrize("nfc", [True, False])
+def test_canonicalize_one_arrow_crossing(spark, nfc):
+    plan = executed_plan_str(canonicalize(events_df(spark, 20), nfc=nfc))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "BatchEvalPython" not in plan
+    assert "array_join" not in plan
 
 
 def test_sha256_matches_hashlib(spark):
