@@ -28,6 +28,16 @@ Either way every rewritten file comes out of ONE kernel
 key in the sort the writer consumes.  Compaction and delta folds use the
 same kernel.
 
+Batch planning
+--------------
+The planner decides, the executor runs.  Every decision of a write —
+stage medium, histogram source, the rewrite's bucket closure and its
+rewritten/carried files, CoW vs MoR, broadcast vs shuffle, delta file vs
+kernel, file slices and placement, write-time stats vs a scan, the
+inline debt fold — is made by ``etl_spark.catalog.plan`` from the
+manifest and a few measured facts, without Spark.  ``apply_batch`` and
+``compact`` measure, ask the planner, and run exactly its plan.
+
 Scale notes (100 TB / 1000 executors): the only per-batch driver state is
 the manifest (file entries) and the watermark vector.  Steady-state file
 count stays ~O(n_buckets + data/128MB) because survivor rewrites
@@ -44,10 +54,22 @@ import time
 import uuid
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType
 
+from etl_spark.catalog.plan import (
+    STATS_SPLIT_BYTES,
+    BatchFacts,
+    Layout,
+    bucket_debt,
+    bucket_id_space,
+    plan_batch,
+    plan_compact,
+    plan_debt_fold,
+    plan_stage,
+    promote_hot,
+)
 from etl_spark.catalog.snapshot import FileEntry, Snapshot, SnapshotLog
 from etl_spark.functions.hashing import key_bucket
 from etl_spark.functions.xxhash import cold_bucket
@@ -130,7 +152,6 @@ class LakeTable:
         mor_max_delta_files: int = 64,
         manifest_shard_min_files: int = 4096,
         manifest_shard_buckets: int = 16,
-        stage_small_rows: int = 25_000,
         max_file_bytes: int = 512 << 20,
         compact_max_rewrite_bytes: int = 16 << 30,
         mor_small_delta_bytes: int = 64 << 20,
@@ -160,7 +181,6 @@ class LakeTable:
                 "mor_max_delta_files": str(mor_max_delta_files),
                 "manifest_shard_min_files": str(manifest_shard_min_files),
                 "manifest_shard_buckets": str(manifest_shard_buckets),
-                "stage_small_rows": str(stage_small_rows),
                 "max_file_bytes": str(max_file_bytes),
                 "compact_max_rewrite_bytes": str(compact_max_rewrite_bytes),
                 "mor_small_delta_bytes": str(mor_small_delta_bytes),
@@ -438,41 +458,193 @@ class LakeTable:
         finally:
             shutil.rmtree(stage_dir, ignore_errors=True)
 
-    def _apply_inner(
-        self,
-        d0,
-        d,
-        batch_id,
-        snap,
-        strategy,
-        t0,
-        stage_dir,
-        canonicalizer=None,
-        mode=None,
-        set_properties=None,
-    ) -> dict:
+    def _apply_inner(self, d0, d, batch_id, snap, strategy, t0, stage_dir,
+                     canonicalizer=None, mode=None, set_properties=None) -> dict:
+        """Measure the batch's facts, let ``plan_batch`` decide, run
+        exactly that plan, commit."""
         phases: dict[str, float] = {}
+        last = [t0]
 
-        def mark(name: str, since: float) -> float:
+        def mark(name: str) -> None:  # seconds since the previous mark
             now = time.monotonic()
-            phases[name] = round(now - since, 3)
-            return now
+            phases[name] = round(now - last[0], 3)
+            last[0] = now
 
-        # -- lineage + watermark + hot-repo stats in ONE aggregation pass
-        # (grouping sets: by part_id for the watermark vector / metrics,
-        # by repo for skew accounting).  Narrow projection: parquet
-        # column pruning means the content column is never read here.
-        # The aggregate is persisted (narrow rows — columnar cache is
-        # only hostile to KB-wide contents) so the per-repo side can be
-        # capped EXECUTOR-side: the driver collects the small part_id
-        # vector plus at most ``repo_stats_topk`` heavy-hitter repos
-        # (TakeOrderedAndProject), never one row per distinct repo —
-        # a 10^7-event long-tail batch would otherwise OOM the driver. ---
+        rows = self._collect_stats(d0, snap)
+        part_rows = [r for r in rows if r["part_id"] is not None]
+        repo_rows = [r for r in rows if r["part_id"] is None]
+        batch_wm = {int(r["part_id"]): int(r["end_seq"]) for r in part_rows}
+        n_events = sum(int(r["rows_applied"]) for r in part_rows)
+        mark("stats_job")
+
+        if n_events == 0:
+            # all-duplicate batch: still commit the fence so replay skips it
+            new = self._child(snap)
+            new.op = "fence"
+            new.last_batch_id = batch_id
+            _apply_props(new.properties, set_properties)
+            self._write_metrics(batch_id, [], t0)  # before commit: see below
+            self.log.commit(new, expect_parent=snap.version)
+            return {"batch_id": batch_id, "events": 0, "skipped": False}
+
+        # hot-repo accounting + promotion, before bucket assignment
+        new_snap = self._child(snap)
+        promoted = promote_hot(
+            new_snap, {r["repo"]: int(r["rows_applied"]) for r in repo_rows},
+            n_events,
+        )
+        bucket = self._bucket_expr(new_snap)
+        staged, histogram = self._stage(d, new_snap, n_events, bucket, stage_dir)
+        d = canonicalizer(staged) if canonicalizer is not None else staged
+        # schema evolution: delta columns not yet in the table.  Reads
+        # declare promoted columns as strings, so any other type is
+        # refused here, before a table file is written.
+        added = [f for f in d.schema.fields
+                 if f.name not in ENVELOPE_COLUMNS and f.name not in snap.columns]
+        bad = [f"{f.name} {f.dataType.simpleString()}" for f in added
+               if not isinstance(f.dataType, StringType)]
+        if bad:
+            raise TypeError(f"batch {batch_id} adds non-string column(s) "
+                            f"{', '.join(bad)}: new table columns must be strings")
+        new_cols = [f.name for f in added]
+        all_cols = list(snap.columns) + new_cols
+        mark("stage_delta")
+        facts = BatchFacts(n_events, promoted, histogram(), new_cols)
+        mark("bucket_job")
+
+        plan = plan_batch(
+            snap, facts, self.spark.sparkContext.defaultParallelism, mode,
+            strategy,
+        )
+        if new_cols:
+            new_snap.columns = all_cols
+            new_snap.schema_version = snap.schema_version + 1
+        delta_rows = self._to_table_rows(d, batch_id, all_cols)
+        rel_dir = os.path.join(
+            "data",
+            f"{'d' if plan.use_mor else 'b'}{batch_id:08d}-{uuid.uuid4().hex[:8]}",
+        )
+        if plan.single_file:
+            new_entries = self._write_delta_single(
+                delta_rows, rel_dir, plan.batch_buckets, bucket
+            )
+            mark("merge_write")
+            mark("scan_written")
+        else:
+            # copy-on-write: the touched slice — base files PLUS any
+            # pending delta files in those buckets, read unresolved at
+            # the batch's columns (files older than a column promoted now
+            # read it as null) — is rewritten with the batch's rows; the
+            # kernel keeps the latest row per key.  A big merge-on-read
+            # delta is the batch's rows alone.
+            inputs = [delta_rows]
+            slice_files = plan.slice_base + plan.slice_delta
+            if not plan.use_mor and slice_files:
+                slice_df = self._read_files(new_snap, slice_files)
+                inputs = (
+                    [self._merge_broadcast(slice_df, staged, delta_rows, all_cols)]
+                    if plan.strategy == "broadcast"
+                    else [slice_df, delta_rows]
+                )
+            new_entries = self._write_bucketed(
+                self._latest_rows(inputs, all_cols, bucket, plan.layout),
+                rel_dir,
+                plan.touched if plan.observe_stats else None,
+                mark,
+            )
+
+        # -- commit ---------------------------------------------------------
+        if plan.use_mor:
+            new_snap.files = list(snap.files)
+            new_snap.delta_files = list(snap.delta_files) + new_entries
+        else:
+            new_snap.files = plan.carried + new_entries
+            new_snap.delta_files = plan.carried_delta
+        new_snap.op = "merge-mor" if plan.use_mor else "merge-cow"
+        new_snap.last_batch_id = batch_id
+        new_snap.watermarks = {
+            str(k): v for k, v in merge_watermarks(snap.wm(), batch_wm).items()
+        }
+        new_snap.properties["total_events"] = str(
+            int(snap.properties.get("total_events", "0")) + n_events
+        )
+        _apply_props(new_snap.properties, set_properties)
+        # metrics BEFORE the snapshot commit: the file is named by batch
+        # id (idempotent overwrite on replay), so a crash between the
+        # two leaves either a harmless orphan metrics file (batch will
+        # re-merge under the same id) or nothing — never a committed
+        # batch without lineage
+        latency_ms = self._write_metrics(batch_id, part_rows, t0)
+        self.log.commit(new_snap, expect_parent=snap.version)
+        mark("commit")
+
+        # delta-debt control: a merge-on-read commit may trip an inline,
+        # targeted fold (``plan_debt_fold``)
+        fold = plan_debt_fold(new_snap) if plan.use_mor else []
+        if fold:
+            self.compact(buckets=fold)
+
+        return {
+            "batch_id": batch_id,
+            "skipped": False,
+            "phases": phases,
+            "events": n_events,
+            "repo_stat_rows": len(repo_rows),
+            "delta_keys": plan.delta_keys,
+            "strategy": plan.strategy,
+            "mode": "mor" if plan.use_mor else "cow",
+            "touched_buckets": plan.touched,
+            "rewrote_files": 0 if plan.use_mor else len(plan.slice_base),
+            "carried_files": len(plan.carried),
+            "new_files": len(new_entries),
+            "delta_files_pending": (
+                len(self.snapshot().delta_files)
+                if fold
+                else len(new_snap.delta_files)
+            ),
+            "compacted": bool(fold),
+            "promoted": promoted,
+            "latency_ms": latency_ms,
+        }
+
+    def _collect_stats(self, d0: DataFrame, snap: Snapshot) -> list:
+        """Lineage + watermark + hot-repo stats in ONE aggregation pass
+        (grouping sets: by part_id for the watermark vector / metrics,
+        by repo for skew accounting).  Narrow projection: parquet column
+        pruning means the content column is never read here.  The
+        aggregate is persisted (narrow rows — columnar cache is only
+        hostile to KB-wide contents) so the per-repo side can be capped
+        EXECUTOR-side: the driver collects the small part_id vector plus
+        at most ``repo_stats_topk`` heavy-hitter repos
+        (TakeOrderedAndProject), never one row per distinct repo — a
+        10^7-event long-tail batch would otherwise OOM the driver.
+
+        SINGLE-CHAIN job discipline: overlapping this job with the
+        staging work (two concurrent AQE SQL executions, one on the
+        stream-execution JVM thread under pinned-thread Py4J) hits a
+        lost-stage-event race in Spark's AdaptiveSparkPlanExec and hangs
+        the stream on an idle JVM (jstack-verified).  Latency wins must
+        come from FUSING jobs on the one chain, never from overlapping
+        SQL executions."""
+        from pyspark import StorageLevel
+
         topk = int(snap.properties.get("repo_stats_topk", "200"))
-
-        def _collect_stats() -> list:
-            from pyspark import StorageLevel
-
+        # Two scoped confs, restored before the wide stage/merge jobs run
+        # (safe: the per-batch job chain is single-threaded, see above).
+        # The scan is NARROW (3 pruned columns, ~2% of file bytes), so the
+        # engine-wide 32MB split size tuned for the WIDE content path made
+        # ~75 near-empty tasks on a 2.4GB segment, whose launch overhead
+        # WAS the phase cost: split coarser.  AQE size-based coalescing
+        # would fold the ~30MB deduped projection's shuffles into ONE
+        # partition, one task aggregating the whole batch serially
+        # (measured 8-24s stalls): off, so partitions follow the constant
+        # spark.sql.shuffle.partitions at every parallelism level.
+        conf = self.spark.conf
+        prev_split = conf.get("spark.sql.files.maxPartitionBytes")
+        prev_coal = conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        conf.set("spark.sql.files.maxPartitionBytes", str(STATS_SPLIT_BYTES))
+        conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        try:
             stats_df = (
                 d0.select("part_id", "seq", "repo")
                 .groupingSets([["part_id"], ["repo"]], "part_id", "repo")
@@ -501,476 +673,64 @@ class LakeTable:
                 )
             finally:
                 stats_df.unpersist()
-
-        # SINGLE-CHAIN job discipline: an earlier build overlapped this
-        # stats job on a background thread with the staging/histogram
-        # work.  The two concurrent AQE SQL executions (background
-        # collect + the foreachBatch chain's staged write, which runs ON
-        # the stream-execution JVM thread under pinned-thread Py4J) hit
-        # a lost-stage-event race inside Spark's AdaptiveSparkPlanExec:
-        # withFinalPlanUpdate's queue.take never received its stage
-        # event and the stream hung forever on an otherwise idle JVM
-        # (jstack-verified).  Latency wins must come from FUSING jobs on
-        # the one chain, never from overlapping SQL executions.
-        small_rows = int(snap.properties.get("stage_small_rows", "25000"))
-        # The stats scan is NARROW (3 pruned columns, ~2% of file bytes)
-        # but inherits the engine-wide 32MB split size tuned for the
-        # WIDE content path — on a 2.4GB segment that is ~75 near-empty
-        # tasks whose launch overhead IS the phase cost (measured: the
-        # phase scaled 0.55 from 2→8 cores because task dispatch doesn't
-        # parallelize).  Split coarser for this one job and restore
-        # before the wide stage/merge jobs run.  Safe: the per-batch job
-        # chain is single-threaded by design (see the AQE-race note
-        # above), so a scoped conf set/restore cannot race.
-        stats_split = snap.properties.get("stats_split_bytes", str(128 << 20))
-        prev_split = self.spark.conf.get("spark.sql.files.maxPartitionBytes")
-        # AQE size-based coalescing is actively harmful to this job: the
-        # deduped projection is ~30MB of narrow rows, so a 64MB advisory
-        # coalesces the dedup/agg shuffles to ONE partition and a single
-        # task hash-aggregates the whole micro-batch serially (measured
-        # 8-24s of a 2-core-equivalent stall per batch under
-        # parallelismFirst=false).  Scoped off: partitions then follow
-        # the constant spark.sql.shuffle.partitions — same plan at every
-        # parallelism level, fine-grained on all of them.  Same
-        # single-threaded-chain safety argument as the split override.
-        prev_coal = self.spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.enabled", "true"
-        )
-        self.spark.conf.set("spark.sql.files.maxPartitionBytes", stats_split)
-        self.spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", "false"
-        )
-        try:
-            rows = _collect_stats()
         finally:
-            self.spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
-            self.spark.conf.set(
-                "spark.sql.adaptive.coalescePartitions.enabled", prev_coal
-            )
-        part_rows = [r for r in rows if r["part_id"] is not None]
-        repo_rows = [r for r in rows if r["part_id"] is None]
-        batch_wm = {int(r["part_id"]): int(r["end_seq"]) for r in part_rows}
-        n_events = sum(int(r["rows_applied"]) for r in part_rows)
-        tp = mark("stats_job", t0)
+            conf.set("spark.sql.files.maxPartitionBytes", prev_split)
+            conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev_coal)
 
-        if n_events == 0:
-            # all-duplicate batch: still commit the fence so replay skips it
-            new = self._child(snap)
-            new.op = "fence"
-            new.last_batch_id = batch_id
-            _apply_props(new.properties, set_properties)
-            self._write_metrics(batch_id, [], t0)  # before commit: see below
-            self.log.commit(new, expect_parent=snap.version)
-            return {"batch_id": batch_id, "events": 0, "skipped": False}
+    def _stage(self, d: DataFrame, snap: Snapshot, n_events: int, bucket, stage_dir: str):
+        """Stage the RAW LWW winners: the one key-shuffle materializes
+        once, in parallel, WITHOUT the canonicalize pipeline on its
+        critical path; the bucket histogram reads the raw stage, and
+        canonicalize (normalize/NFC/sha256 — including the only Python
+        hop) runs exactly once, applied to the staged scan feeding the
+        merge write.  ``plan_stage`` picks the medium and the histogram
+        source; either way every consumer scans one materialization.
 
-        # -- hot-repo accounting + promotion (before bucket assignment) ---
-        repo_counts = {r["repo"]: int(r["rows_applied"]) for r in repo_rows}
-        new_snap = self._child(snap)
-        promoted = self._update_hot(new_snap, repo_counts, n_events)
-
-        # promoted repos' rows currently live in their old COLD buckets
-        # (resolved against the PRE-promotion snapshot) — driver-side hash,
-        # no Spark job
-        migrate_buckets: set[int] = {
-            cold_bucket(r, snap.n_buckets) for r in promoted
-        }
-
-        # -- stage the RAW LWW winners: the one key-shuffle materializes
-        # once, in parallel, WITHOUT the canonicalize pipeline on its
-        # critical path; the bucket histogram reads the raw stage, and
-        # canonicalize (normalize/NFC/sha256 — including the only Python
-        # hop) runs exactly once, applied to the staged scan feeding the
-        # merge write.
-        # Stage medium: a parquet round-trip for big batches (Spark's
-        # in-memory columnar cache anti-scales on KB-wide content rows),
-        # but for SMALL batches — the steady-state tail, where a
-        # dedicated write job + read setup is ~1.5 s of pure fixed cost
-        # per micro-batch — a lazy localCheckpoint materializes the
-        # winners as plain row blocks (no columnar encode) on their
-        # first consumer instead.  Same reuse semantics either way:
-        # every consumer below scans one materialization. -----------------
-        bucket = self._bucket_expr(new_snap)
-        stage_obs = None
-        if n_events <= small_rows:
+        Returns the staged frame and a thunk for its per-bucket
+        ``{bucket: (rows, bytes)}`` histogram."""
+        bucket_ids = bucket_id_space(snap)
+        stage = plan_stage(n_events, len(bucket_ids))
+        if stage.checkpoint:
             staged = d.localCheckpoint(eager=False)
-        else:
-            # the per-bucket histogram RIDES the stage write as observe
-            # aggregates (exact conditional sums pivoted over the bucket
-            # id space) instead of re-scanning the staged delta —
-            # content included, that re-scan was a full second read of
-            # the batch plus one more job barrier per micro-batch.
-            # Gated to a bounded id space (codegen width) with the
-            # separate-histogram job as the exact fallback.
-            bucket_ids = self._bucket_id_space(new_snap)
-            to_write = d
-            if len(bucket_ids) <= 64:
-                from pyspark.sql import Observation
+            return staged, lambda: self._bucket_histogram(staged, bucket)
+        to_write, obs = d, None
+        if stage.observe_histogram:
+            # exact conditional sums pivoted over the bucket id space ride
+            # the stage write: re-scanning the staged delta, content
+            # included, was a second read of the batch plus one more job
+            per_row = self._row_bytes_expr(d)
+            obs = Observation()
+            aggs = []
+            for b in bucket_ids:
+                # condition on a MATERIALIZED bucket column: inlining the
+                # raw bucket expression (xxhash + salt CASE) into every
+                # conditional aggregate re-evaluates the hash once per agg
+                # per row (no CSE across agg buffers) — ~2 x |bucket_ids|
+                # hashes/row of pure waste
+                w = F.col("_stage_b") == b
+                aggs += [
+                    F.sum(F.when(w, 1).otherwise(0)).alias(f"cnt_{b}"),
+                    F.sum(F.when(w, per_row).otherwise(0)).alias(f"bytes_{b}"),
+                ]
+            to_write = (
+                d.withColumn("_stage_b", bucket)
+                .observe(obs, *aggs)
+                .drop("_stage_b")
+            )
+        to_write.write.mode("overwrite").parquet(stage_dir)
+        staged = self.spark.read.schema(d.schema).parquet(stage_dir)
+        if obs is None:
+            return staged, lambda: self._bucket_histogram(staged, bucket)
 
-                per_row = self._row_bytes_expr(d)
-                stage_obs = Observation()
-                aggs = []
-                for b in bucket_ids:
-                    # condition on a MATERIALIZED bucket column: inlining
-                    # the raw bucket expression (xxhash + salt CASE) into
-                    # every conditional aggregate re-evaluates the hash
-                    # once per agg per row (no CSE across agg buffers) —
-                    # ~2 x |bucket_ids| hashes/row of pure waste
-                    w = F.col("_stage_b") == b
-                    aggs += [
-                        F.sum(F.when(w, 1).otherwise(0)).alias(f"cnt_{b}"),
-                        F.sum(F.when(w, per_row).otherwise(0)).alias(
-                            f"bytes_{b}"
-                        ),
-                    ]
-                to_write = (
-                    d.withColumn("_stage_b", bucket)
-                    .observe(stage_obs, *aggs)
-                    .drop("_stage_b")
-                )
-            to_write.write.mode("overwrite").parquet(stage_dir)
-            staged = self.spark.read.schema(d.schema).parquet(stage_dir)
-        d = canonicalizer(staged) if canonicalizer is not None else staged
-        # -- schema evolution: delta columns not yet in the table.  Reads
-        # declare promoted columns as strings, so any other type is
-        # refused here, before a table file is written.
-        added = [
-            f for f in d.schema.fields
-            if f.name not in ENVELOPE_COLUMNS and f.name not in snap.columns
-        ]
-        bad = [f"{f.name} {f.dataType.simpleString()}" for f in added
-               if not isinstance(f.dataType, StringType)]
-        if bad:
-            raise TypeError(f"batch {batch_id} adds non-string column(s) "
-                            f"{', '.join(bad)}: new table columns must be strings")
-        new_cols = [f.name for f in added]
-        all_cols = list(snap.columns) + new_cols
-        tp = mark("stage_delta", tp)
-        if stage_obs is not None:
-            vals = stage_obs.get
-            bucket_rows = [
-                {"bucket": b, "cnt": int(vals[f"cnt_{b}"] or 0),
-                 "bytes": int(vals[f"bytes_{b}"] or 0)}
+        def observed() -> dict[int, tuple[int, int]]:
+            vals = obs.get
+            return {
+                b: (int(vals[f"cnt_{b}"] or 0), int(vals[f"bytes_{b}"] or 0))
                 for b in bucket_ids
                 if int(vals[f"cnt_{b}"] or 0) > 0
-            ]
-        else:
-            bucket_rows = self._bucket_histogram(staged, bucket)
-        touched = {int(r["bucket"]) for r in bucket_rows} | migrate_buckets
-        delta_bytes = sum(int(r["bytes"] or 0) for r in bucket_rows)
-        tp = mark("bucket_job", tp)
-
-        # bucket-set CLOSURE over pending deltas: a delta file may span
-        # buckets beyond this batch's touched set (small deltas are
-        # written as ONE multi-bucket file).  A copy-on-write fold of
-        # such a file would emit its out-of-set rows as new base rows
-        # while those buckets' old base files are carried — duplicate
-        # keys in the base set.  Expanding the fold to every selected
-        # delta file's full bucket span (to a fixpoint: newly added
-        # buckets can pull in more delta files) keeps the invariant that
-        # a folded delta row's bucket always has its base in the same
-        # rewrite.  MoR batches fold nothing, so the closure only ever
-        # widens an actual copy-on-write slice.
-        batch_buckets = set(touched)  # this batch's own delta buckets
-        fold_touched = set(touched)
-        while True:
-            ext = {
-                b
-                for e in snap.delta_files
-                if set(e.buckets) & fold_touched
-                for b in e.buckets
             }
-            if ext <= fold_touched:
-                break
-            fold_touched |= ext
-        touched = fold_touched
-        slice_base = [e for e in snap.files if set(e.buckets) & touched]
-        carried = [e for e in snap.files if not (set(e.buckets) & touched)]
-        # pending merge-on-read delta files in touched buckets are folded
-        # into this rewrite (and dropped from the manifest); untouched
-        # ones are carried forward
-        slice_delta = [e for e in snap.delta_files if set(e.buckets) & touched]
-        carried_delta = [
-            e for e in snap.delta_files if not (set(e.buckets) & touched)
-        ]
 
-        if new_cols:
-            new_snap.columns = all_cols
-            new_snap.schema_version = snap.schema_version + 1
-
-        d_count = sum(int(r["cnt"]) for r in bucket_rows)
-
-        # -- write-mode decision: copy-on-write vs merge-on-read ----------
-        # MoR skips the base-bucket rewrite entirely (the batch's LWW
-        # winners land as a bucketed DELTA file; readers resolve by key)
-        # — the write-amplification escape hatch for small deltas over
-        # fat buckets at 10^10-event scale.  Promotion and schema-change
-        # batches stay copy-on-write (both mutate base layout/columns),
-        # as does the very first write.
-        mode = mode or snap.properties.get("write_mode", "cow")
-        # amplification is measured in ROWS (manifest slice rows + pending
-        # delta rows CoW would fold, vs delta keys): rows are
-        # unit-consistent — every row shares one schema — where the old
-        # bytes test compared COMPRESSED on-disk slice bytes against an
-        # UNCOMPRESSED delta-length estimate and silently understated
-        # amplification by the codec ratio (a 9×-row steady-state tail
-        # measured as ~4.5× and stayed copy-on-write, 1.5× slower)
-        slice_rows = sum(e.rows for e in slice_base) + sum(
-            e.rows for e in slice_delta
-        )
-        mor_min_amp = float(snap.properties.get("mor_min_amplification", "4"))
-        use_mor = (
-            mode in ("mor", "auto")
-            and not promoted
-            and not new_cols
-            and bool(slice_base)
-            and (
-                mode == "mor"
-                or slice_rows > mor_min_amp * max(1, d_count)
-            )
-        )
-
-        if strategy == "auto":
-            thr = int(snap.properties.get("broadcast_threshold_rows", "2000000"))
-            thr_bytes = int(
-                snap.properties.get("broadcast_threshold_bytes", str(64 << 20))
-            )
-            # broadcasting the delta ships it through the driver once —
-            # only sane when the payload is genuinely small
-            strategy = (
-                "broadcast"
-                if d_count <= thr and delta_bytes <= thr_bytes
-                else "shuffle"
-            )
-
-        delta_rows = self._to_table_rows(d, batch_id, all_cols)
-        bexpr = bucket  # same key->bucket resolution as the histogram above
-        # bucket-cluster EVERY output file: hash-repartition on bucket
-        # (no range-sampler job), then write partitionBy("bucket") so a
-        # data file belongs to EXACTLY one bucket by construction — the
-        # manifest needs no stats guessing and CoW pruning stays exact.
-        # This includes the broadcast-path survivors: skipping their
-        # shuffle was measured cheap, but it let file scans mix buckets
-        # across source files, progressively widening every file's
-        # claimed bucket span.
-        # bounded file sizes: a fat bucket must never become one enormous
-        # data file (at 10^10-event scale a bucket can be 100s of GB; a
-        # single file per bucket would defeat scan parallelism limits,
-        # retries, and object-store sanity).  Fat buckets split into
-        # path-hash slices of ~max_file_bytes each — still one BUCKET per
-        # file (partitionBy below), just several files per fat bucket.
-        max_fb = int(snap.properties.get("max_file_bytes", str(512 << 20)))
-        bytes_by_bucket: dict[int, int] = {}
-        for r in bucket_rows:  # delta contribution (uncompressed estimate
-            # — conservative: overestimates slice counts, never under)
-            bytes_by_bucket[int(r["bucket"])] = (
-                bytes_by_bucket.get(int(r["bucket"]), 0) + int(r["bytes"] or 0)
-            )
-        if not use_mor:
-            for e in slice_base + slice_delta:
-                share = e.bytes // max(1, len(e.buckets))
-                for b in e.buckets:
-                    bytes_by_bucket[b] = bytes_by_bucket.get(b, 0) + share
-        # writer parallelism floor: a rewrite touching fewer buckets than
-        # the cluster has cores runs under-parallel; slice the largest
-        # buckets further (>=16MB per slice) so the write stage can use
-        # the machine.  Disabled on promotion batches (rows can leave the
-        # touched set mid-rehash, so exact group enumeration is off).
-        min_par = 0 if promoted else self.spark.sparkContext.defaultParallelism
-        slice_expr, extra_parts, slice_ks = self._file_slice_expr(
-            bytes_by_bucket, max_fb, min_parallel=min_par
-        )
-        npart = max(1, min(len(touched) + extra_parts, 2048))
-        # collision-free (bucket, slice) -> partition placement: even
-        # writer waves.  Promotion batches fall back to hash partitioning
-        # (same gate as above).
-        tok = (
-            self._placement_expr(sorted(touched), slice_ks)
-            if not promoted
-            else (None, 0)
-        )
-        new_entries = None
-        # Small merge-on-read deltas are written as ONE multi-bucket file
-        # instead of one file per touched bucket: a 10k-row steady-state
-        # micro-batch whose keys spread over every bucket would otherwise
-        # add n_buckets tiny files per batch — the delta-file-count debt
-        # cap then trips every few batches and the inline fold's pause
-        # dominates tail p95 (and at object-store scale the small-file
-        # flood is its own failure mode).  The file's manifest entry
-        # carries the full bucket set for pruning; targeted compaction
-        # splits such files (folds the selected buckets' rows, rewrites
-        # the remainder as a fresh leftover delta).  Big deltas keep the
-        # per-bucket layout, where per-file pruning pays for itself.
-        small_delta_bytes = int(
-            snap.properties.get("mor_small_delta_bytes", str(64 << 20))
-        )
-        if use_mor and delta_bytes <= small_delta_bytes and not migrate_buckets:
-            strategy = "mor-delta"
-            rel_dir = os.path.join(
-                "data", f"d{batch_id:08d}-{uuid.uuid4().hex[:8]}"
-            )
-            new_entries = self._write_delta_single(
-                delta_rows, rel_dir, sorted(batch_buckets), bexpr
-            )
-            tp = mark("merge_write", tp)
-            tp = mark("scan_written", tp)
-        elif use_mor:
-            strategy = "mor-delta"
-            inputs = [delta_rows]
-            rel_dir = os.path.join(
-                "data", f"d{batch_id:08d}-{uuid.uuid4().hex[:8]}"
-            )
-        else:
-            # copy-on-write: the touched slice — base files PLUS any
-            # pending delta files in those buckets, read unresolved at
-            # the batch's columns (files older than a column promoted now
-            # read it as null) — is rewritten with the batch's rows; the
-            # kernel keeps the latest row per key
-            inputs = [delta_rows]
-            if slice_base or slice_delta:
-                slice_df = self._read_files(new_snap, slice_base + slice_delta)
-                inputs = (
-                    [self._merge_broadcast(slice_df, staged, delta_rows, all_cols)]
-                    if strategy == "broadcast"
-                    else [slice_df, delta_rows]
-                )
-            rel_dir = os.path.join(
-                "data", f"b{batch_id:08d}-{uuid.uuid4().hex[:8]}"
-            )
-
-        if new_entries is None:
-            merged = self._latest_rows(
-                inputs, all_cols, bexpr, slice_expr, tok, npart
-            )
-
-            # -- write new data files --------------------------------------
-            # Manifest stats are observed DURING the write job (one pass
-            # over the data, VERDICT r4 #3): per-touched-bucket conditional
-            # aggregates ride the write plan via ``observe`` and, because
-            # the no-slice layout writes exactly one file per non-empty
-            # bucket (each (bucket, slice=0) group lands in one shuffle
-            # partition; partitionBy splits a task's rows per bucket), they
-            # map 1:1 onto output files.  Gated off — falling back to the
-            # column-pruned post-write scan — when the mapping can break:
-            # file slices (extra_parts > 0), hot-repo promotion (output
-            # buckets leave the touched set mid-rehash), or a touched set
-            # wide enough that the conditional-agg expression tree would
-            # bloat codegen (backfills, where a second scan is noise
-            # anyway).
-            obs = None
-            obs_buckets = sorted(touched)
-            if extra_parts == 0 and not promoted and len(obs_buckets) <= 64:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                aggs = []
-                for b in obs_buckets:
-                    w = F.col("bucket") == b
-                    aggs += [
-                        F.sum(F.when(w, 1).otherwise(0)).alias(f"rows_{b}"),
-                        F.sum(
-                            F.when(w & ~F.col("_deleted"), 1).otherwise(0)
-                        ).alias(f"live_{b}"),
-                        F.min(F.when(w, F.col("repo"))).alias(f"min_{b}"),
-                        F.max(F.when(w, F.col("repo"))).alias(f"max_{b}"),
-                    ]
-                merged = merged.observe(obs, *aggs)
-            out_dir = os.path.join(self.root, rel_dir)
-            merged.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
-            tp = mark("merge_write", tp)
-            if obs is not None:
-                vals = obs.get
-                per_bucket = {
-                    b: {
-                        "rows": int(vals[f"rows_{b}"] or 0),
-                        "live": int(vals[f"live_{b}"] or 0),
-                        "min_repo": vals[f"min_{b}"],
-                        "max_repo": vals[f"max_{b}"],
-                    }
-                    for b in obs_buckets
-                }
-                new_entries = self._entries_from_stats(rel_dir, per_bucket)
-            if new_entries is None:
-                new_entries = self._scan_written(rel_dir)
-            tp = mark("scan_written", tp)
-
-        # -- commit ---------------------------------------------------------
-        if use_mor:
-            new_snap.files = list(snap.files)
-            new_snap.delta_files = list(snap.delta_files) + new_entries
-        else:
-            new_snap.files = carried + new_entries
-            new_snap.delta_files = carried_delta
-        new_snap.op = "merge-mor" if use_mor else "merge-cow"
-        new_snap.last_batch_id = batch_id
-        new_snap.watermarks = {
-            str(k): v for k, v in merge_watermarks(snap.wm(), batch_wm).items()
-        }
-        new_snap.properties["total_events"] = str(
-            int(snap.properties.get("total_events", "0")) + n_events
-        )
-        _apply_props(new_snap.properties, set_properties)
-        # metrics BEFORE the snapshot commit: the file is named by batch
-        # id (idempotent overwrite on replay), so a crash between the
-        # two leaves either a harmless orphan metrics file (batch will
-        # re-merge under the same id) or nothing — never a committed
-        # batch without lineage
-        latency_ms = self._write_metrics(batch_id, part_rows, t0)
-        self.log.commit(new_snap, expect_parent=snap.version)
-        mark("commit", tp)
-
-        # delta-debt control: when pending MoR rows exceed the configured
-        # fraction of base rows (read-merge volume) or the delta FILE
-        # count cap trips (steady-state small deltas add a file per batch
-        # while the row ratio crawls), fold debt down.  The fold is
-        # TARGETED and byte-capped: debt-heaviest buckets first, at most
-        # ``compact_max_rewrite_bytes`` rewritten inline — a debt trip on
-        # a 100 TB table must pause the stream for one bounded slice,
-        # never a table-sized rewrite (VERDICT r4 #1); leftover debt
-        # drains across subsequent trips.
-        compacted = False
-        if use_mor and new_snap.delta_files:
-            base_rows = sum(e.rows for e in new_snap.files) or 1
-            debt = sum(e.rows for e in new_snap.delta_files)
-            ratio = float(snap.properties.get("mor_compact_ratio", "0.5"))
-            max_df = int(snap.properties.get("mor_max_delta_files", "64"))
-            if debt > ratio * base_rows or len(new_snap.delta_files) > max_df:
-                byte_cap = int(
-                    snap.properties.get(
-                        "compact_max_rewrite_bytes", str(16 << 30)
-                    )
-                )
-                sel = self._select_fold_buckets(
-                    new_snap,
-                    target_rows=int(ratio * base_rows / 2),
-                    target_files=max_df // 2,
-                    max_rewrite_bytes=byte_cap,
-                )
-                if sel:
-                    self.compact(buckets=sel)
-                    compacted = True
-
-        return {
-            "batch_id": batch_id,
-            "skipped": False,
-            "phases": phases,
-            "events": n_events,
-            "repo_stat_rows": len(repo_rows),
-            "delta_keys": d_count,
-            "strategy": strategy,
-            "mode": "mor" if use_mor else "cow",
-            "touched_buckets": sorted(touched),
-            "rewrote_files": 0 if use_mor else len(slice_base),
-            "carried_files": len(carried),
-            "new_files": len(new_entries),
-            "delta_files_pending": (
-                len(self.snapshot().delta_files)
-                if compacted
-                else len(new_snap.delta_files)
-            ),
-            "compacted": compacted,
-            "promoted": promoted,
-            "latency_ms": latency_ms,
-        }
+        return staged, observed
 
     # ------------------------------------------------------------------ #
     # merge strategies
@@ -1032,24 +792,35 @@ class LakeTable:
         return resolved.unionByName(news)
 
     @staticmethod
-    def _placement_expr(buckets: list[int], ks: dict[int, int]):
-        """Exact shuffle-partition placement for the writer stage.
+    def _slice_expr(ks: dict[int, int]):
+        """The ``_slice`` column of ``Layout.ks``: a path-hash slice id in
+        [0, k) for every row of a sliced bucket, 0 for all other rows —
+        a pure function of the key, like the bucket."""
+        expr = F.lit(0)
+        for b, k in sorted(ks.items()):
+            expr = (
+                F.when(
+                    F.col("bucket") == b,
+                    F.pmod(F.xxhash64(F.col("path")), F.lit(k)).cast("int"),
+                )
+                .otherwise(expr)
+            )
+        return expr
 
-        Returns ``(token_expr, npart)`` mapping every (bucket, slice)
-        group to its OWN shuffle partition, or ``(None, 0)`` when the
-        group count exceeds the writer cap.  ``repartition(n, col)``
-        routes by ``pmod(murmur3(col), n)``; hashing n group ids into n
-        partitions leaves ~n/e partitions empty and stacks 2-3 groups on
-        others (balls-in-bins) — measured as 5.7/8 cores busy on the
-        8-core scaling leg (uneven write waves) while 2 cores ran
-        saturated.  ``placement_tokens`` inverts Spark's hash so the
-        repartition lands exactly one group per partition: even waves,
-        every file written by its own task."""
+    @staticmethod
+    def _placement_expr(pairs: list[tuple[int, int]]):
+        """Shuffle token landing (bucket, slice) group ``pairs[i]`` in
+        partition i of ``repartition(len(pairs), token)``.
+
+        ``repartition(n, col)`` routes by ``pmod(murmur3(col), n)``;
+        hashing n group ids into n partitions leaves ~n/e partitions
+        empty and stacks 2-3 groups on others (balls-in-bins) — measured
+        as 5.7/8 cores busy on the 8-core scaling leg (uneven write
+        waves) while 2 cores ran saturated.  ``placement_tokens`` inverts
+        Spark's hash so the repartition lands exactly one group per
+        partition: even waves, every file written by its own task."""
         from etl_spark.functions.murmur import placement_tokens
 
-        pairs = [(b, s) for b in sorted(buckets) for s in range(ks.get(b, 1))]
-        if not pairs or len(pairs) > 2048:
-            return None, 0
         toks = placement_tokens(len(pairs))
         kv = []
         for i, (b, s) in enumerate(pairs):
@@ -1064,29 +835,26 @@ class LakeTable:
         # 16-bucket table with the parallelism floor's few slices per
         # bucket is tens of groups, a small cost next to the
         # KB-wide row's shuffle write it feeds.
-        return F.element_at(F.create_map(*kv), key).cast("int"), len(pairs)
+        return F.element_at(F.create_map(*kv), key).cast("int")
 
-    def _latest_rows(
-        self,
-        inputs: list[DataFrame],
-        cols: list[str],
-        bucket,
-        slice_expr,
-        tok: tuple,
-        npart: int,
-    ) -> DataFrame:
+    def _latest_rows(self, inputs: list[DataFrame], cols: list[str], bucket,
+                     layout: Layout) -> DataFrame:
         """The one rewrite kernel: every copy-on-write merge, big
         merge-on-read delta, compaction and delta fold writes through it.
 
         Unions ``inputs`` (base slice, pending deltas, the batch's rows —
         whichever the caller has), adds ``bucket`` and ``_slice``, and
-        shuffles ONCE: on the exact ``_placement_expr`` token ``tok``
-        when there is one, else hash on (bucket, _slice) into ``npart``
-        partitions.  Bucket and slice are pure functions of the key, so
-        every row of a key is already in one partition: ``_keep_latest``
-        runs there with the placement columns leading its window, and
-        the final sort is the window's own sort (placement, then key),
-        which is also the writer's order — no second exchange or sort.
+        shuffles ONCE into ``layout.npart`` partitions: on the exact
+        ``_placement_expr`` token when the layout has placement pairs,
+        else hash on (bucket, _slice).  Bucket and slice are pure
+        functions of the key, so every row of a key is already in one
+        partition: ``_keep_latest`` runs there with the placement columns
+        leading its window, and the final sort is the window's own sort
+        (placement, then key), which is also the writer's order — no
+        second exchange or sort.  Bucket-clustering every output file
+        (then writing ``partitionBy("bucket")``) keeps each data file in
+        exactly one bucket, so the manifest needs no stats guessing and
+        copy-on-write pruning stays exact.
 
         The first row per key is kept even for one input that is
         already key-unique (a fresh table's first write, broadcast-merge
@@ -1102,17 +870,19 @@ class LakeTable:
         u = inputs[0]
         for df in inputs[1:]:
             u = u.unionByName(df)
-        u = u.withColumn("bucket", bucket).withColumn("_slice", slice_expr)
-        tok_expr, tok_npart = tok
-        if tok_expr is not None:
+        u = u.withColumn("bucket", bucket).withColumn(
+            "_slice", self._slice_expr(layout.ks)
+        )
+        if layout.pairs is not None:
             # bucket and _slice lead so the output is ordered by the
             # writer's partition column; _tok makes the window's
             # clustering a superset of the shuffle's
             place = ["bucket", "_slice", "_tok"]
-            u = u.withColumn("_tok", tok_expr).repartition(tok_npart, "_tok")
+            u = u.withColumn("_tok", self._placement_expr(layout.pairs))
+            u = u.repartition(layout.npart, "_tok")
         else:
             place = ["bucket", "_slice"]
-            u = u.repartition(npart, *place)
+            u = u.repartition(layout.npart, *place)
         return (
             _keep_latest(u, *place)
             .sortWithinPartitions(*place, *KEY_COLUMNS)
@@ -1120,35 +890,56 @@ class LakeTable:
         )
 
     # ------------------------------------------------------------------ #
-    # hot-repo promotion
-    # ------------------------------------------------------------------ #
-    def _update_hot(
-        self, snap: Snapshot, repo_counts: dict[str, int], n_events: int
-    ) -> list[str]:
-        stats = dict(snap.repo_stats)
-        for r, c in repo_counts.items():
-            stats[r] = stats.get(r, 0) + c
-        # cap driver state: keep top-K repos by cumulative count (same
-        # knob as the per-batch collect — a raised repo_stats_topk must
-        # not be silently truncated back here)
-        topk = int(snap.properties.get("repo_stats_topk", "200"))
-        if len(stats) > topk:
-            stats = dict(sorted(stats.items(), key=lambda kv: -kv[1])[:topk])
-        snap.repo_stats = stats
-        total = int(snap.properties.get("total_events", "0")) + n_events
-        frac = float(snap.properties.get("hot_frac", "0.3"))
-        min_rows = int(snap.properties.get("hot_min_rows", "10000"))
-        promoted = []
-        if total >= min_rows:
-            for r, c in stats.items():
-                if r not in snap.hot_repos and c / total >= frac:
-                    snap.hot_repos.append(r)
-                    promoted.append(r)
-        return promoted
-
-    # ------------------------------------------------------------------ #
     # file stats / metrics / maintenance
     # ------------------------------------------------------------------ #
+    def _write_bucketed(self, df: DataFrame, rel_dir: str, observe: list[int] | None,
+                        mark=lambda phase: None) -> list[FileEntry]:
+        """Write ``df`` ``partitionBy("bucket")`` under ``rel_dir`` and
+        return the new files' manifest entries.
+
+        With ``observe`` buckets, the stats are observed DURING the write
+        job (one pass over the data): per-bucket conditional aggregates
+        ride the write plan, and because that layout writes exactly one
+        file per non-empty bucket (``plan_batch`` decides when) they map
+        1:1 onto output files.  Otherwise, or when the written layout is
+        not the predicted one, the column-pruned post-write scan
+        (``_scan_written``) is the authority."""
+        obs = None
+        if observe is not None:
+            obs = Observation()
+            aggs = []
+            for b in observe:
+                w = F.col("bucket") == b
+                aggs += [
+                    F.sum(F.when(w, 1).otherwise(0)).alias(f"rows_{b}"),
+                    F.sum(
+                        F.when(w & ~F.col("_deleted"), 1).otherwise(0)
+                    ).alias(f"live_{b}"),
+                    F.min(F.when(w, F.col("repo"))).alias(f"min_{b}"),
+                    F.max(F.when(w, F.col("repo"))).alias(f"max_{b}"),
+                ]
+            df = df.observe(obs, *aggs)
+        df.write.mode("overwrite").partitionBy("bucket").parquet(
+            os.path.join(self.root, rel_dir)
+        )
+        mark("merge_write")
+        entries = None
+        if obs is not None:
+            vals = obs.get
+            entries = self._entries_from_stats(rel_dir, {
+                b: {
+                    "rows": int(vals[f"rows_{b}"] or 0),
+                    "live": int(vals[f"live_{b}"] or 0),
+                    "min_repo": vals[f"min_{b}"],
+                    "max_repo": vals[f"max_{b}"],
+                }
+                for b in observe
+            })
+        if entries is None:
+            entries = self._scan_written(rel_dir)
+        mark("scan_written")
+        return entries
+
     def _scan_written(self, rel_dir: str) -> list[FileEntry]:
         """Manifest entries for freshly written data files.
 
@@ -1248,69 +1039,6 @@ class LakeTable:
             return None  # a non-empty bucket wrote no directory: scan
         return sorted(entries, key=lambda e: e.path)
 
-    def _file_slice_expr(
-        self,
-        bytes_by_bucket: dict[int, int],
-        max_bytes: int,
-        min_parallel: int = 0,
-        min_slice_bytes: int = 16 << 20,
-    ):
-        """Column splitting fat buckets into ~max_bytes file slices.
-
-        Returns ``(expr, extra_partitions, ks)``: for every bucket whose
-        estimated bytes exceed ``max_bytes``, rows get a path-hash slice
-        id in [0, k) with k = ceil(bytes/max_bytes); all other rows get
-        slice 0.  Partitioning on (bucket, slice) then writing
-        ``partitionBy("bucket")`` keeps every file single-bucket while
-        bounding its size.  ``ks`` maps bucket -> slice count (absent =
-        1) so callers can enumerate the exact (bucket, slice) group set
-        for collision-free partition placement.
-
-        ``min_parallel``: writer parallelism floor.  A rewrite touching
-        fewer buckets than the cluster has cores runs under-parallel (a
-        32-bucket table on a wide cluster caps its writer stage at 32
-        tasks), so the largest buckets are sliced further — greedily,
-        biggest per-slice bytes first — until the group count reaches
-        the floor or every slice would fall under ``min_slice_bytes``
-        (small-file guard).  Byte-driven slicing above keeps the size
-        bound; this only ever ADDS slices."""
-        ks = {
-            b: -(-by // max_bytes)
-            for b, by in bytes_by_bucket.items()
-            if by > max_bytes
-        }
-        if min_parallel > 1 and bytes_by_bucket:
-            import heapq
-
-            # max-heap on current per-slice bytes
-            heap = [
-                (-(by // ks.get(b, 1)), b)
-                for b, by in bytes_by_bucket.items()
-            ]
-            heapq.heapify(heap)
-            groups = sum(ks.get(b, 1) for b in bytes_by_bucket)
-            while groups < min(min_parallel, 2048) and heap:
-                per_slice, b = heapq.heappop(heap)
-                if -per_slice // 2 < min_slice_bytes:
-                    break  # largest remaining slice already small enough
-                k = ks.get(b, 1) + 1
-                ks[b] = k
-                groups += 1
-                heapq.heappush(heap, (-(bytes_by_bucket[b] // k), b))
-            ks = {b: k for b, k in ks.items() if k > 1}
-        if not ks:
-            return F.lit(0), 0, {}
-        expr = F.lit(0)
-        for b, k in sorted(ks.items()):
-            expr = (
-                F.when(
-                    F.col("bucket") == b,
-                    F.pmod(F.xxhash64(F.col("path")), F.lit(k)).cast("int"),
-                )
-                .otherwise(expr)
-            )
-        return expr, sum(ks.values()) - len(ks), ks
-
     def _child(self, snap: Snapshot) -> Snapshot:
         child = Snapshot.from_json(snap.to_json())
         child.version = snap.version + 1
@@ -1339,18 +1067,8 @@ class LakeTable:
             F.lit(64).cast("long"),
         )
 
-    def _bucket_id_space(self, snap: Snapshot) -> list[int]:
-        """Every bucket id ``key_bucket`` can emit under ``snap``: cold
-        ids [0, n_buckets) plus each hot repo's salted range.  Bounded
-        by construction — the observe-histogram pivot enumerates it."""
-        ids = list(range(snap.n_buckets))
-        for i in range(len(snap.hot_repos)):
-            base = snap.n_buckets + i * snap.salt
-            ids.extend(range(base, base + snap.salt))
-        return ids
-
-    def _bucket_histogram(self, staged: DataFrame, bucket) -> list:
-        """Per-bucket (count, bytes) over the staged LWW winners.
+    def _bucket_histogram(self, staged: DataFrame, bucket) -> dict[int, tuple[int, int]]:
+        """Per-bucket (rows, bytes) over the staged LWW winners.
 
         Doubles as the delta-key count AND the delta payload size
         (drives broadcast-vs-shuffle and file slicing); it reads the RAW
@@ -1360,11 +1078,12 @@ class LakeTable:
         aggregates instead (exact same expressions); this job is the
         fallback (small/localCheckpoint batches, wide bucket spaces)."""
         per_row = self._row_bytes_expr(staged)
-        return (
+        rows = (
             staged.groupBy(bucket.alias("bucket"))
             .agg(F.count("*").alias("cnt"), F.sum(per_row).alias("bytes"))
             .collect()
         )
+        return {int(r["bucket"]): (int(r["cnt"]), int(r["bytes"] or 0)) for r in rows}
 
     def _write_delta_single(
         self, delta_rows: DataFrame, rel_dir: str, buckets: list[int], bexpr
@@ -1782,66 +1501,6 @@ class LakeTable:
             )
         )
 
-    def _bucket_debt(self, snap: Snapshot) -> dict[int, dict]:
-        """Per-bucket maintenance stats from the manifest alone: file
-        count, base/delta rows, and estimated rewrite bytes (multi-bucket
-        legacy files split their bytes evenly across their buckets)."""
-        debt: dict[int, dict] = {}
-
-        def acc(e: FileEntry, kind: str) -> None:
-            share = e.bytes // max(1, len(e.buckets))
-            rshare = e.rows // max(1, len(e.buckets))
-            for b in e.buckets:
-                d = debt.setdefault(
-                    b,
-                    {"files": 0, "base_rows": 0, "delta_rows": 0, "bytes": 0,
-                     "delta_files": 0},
-                )
-                d["files"] += 1
-                d["bytes"] += share
-                d[f"{kind}_rows"] += rshare
-                if kind == "delta":
-                    d["delta_files"] += 1
-
-        for e in snap.files:
-            acc(e, "base")
-        for e in snap.delta_files:
-            acc(e, "delta")
-        return debt
-
-    def _select_fold_buckets(
-        self,
-        snap: Snapshot,
-        target_rows: int,
-        target_files: int,
-        max_rewrite_bytes: int | None,
-    ) -> list[int]:
-        """Pick buckets whose delta debt to fold so the table drops back
-        under half its debt caps, debt-heaviest first, rewriting at most
-        ``max_rewrite_bytes`` in this slice (bounded maintenance pause;
-        any remainder drains on subsequent trips)."""
-        debt = self._bucket_debt(snap)
-        cands = [(b, d) for b, d in debt.items() if d["delta_files"]]
-        cands.sort(key=lambda bd: (-bd[1]["delta_rows"], -bd[1]["delta_files"]))
-        remaining_rows = sum(d["delta_rows"] for _, d in cands)
-        remaining_files = sum(d["delta_files"] for _, d in cands)
-        selected: list[int] = []
-        est = 0
-        for b, d in cands:
-            if remaining_rows <= target_rows and remaining_files <= target_files:
-                break
-            if (
-                max_rewrite_bytes is not None
-                and selected
-                and est + d["bytes"] > max_rewrite_bytes
-            ):
-                break  # bounded pause: the rest waits for the next trip
-            selected.append(b)
-            est += d["bytes"]
-            remaining_rows -= d["delta_rows"]
-            remaining_files -= d["delta_files"]
-        return selected
-
     def maintain(
         self,
         retain_versions: int = 2,
@@ -1865,7 +1524,7 @@ class LakeTable:
         progress, so the debt drains across calls instead of stalling a
         stream for one table-sized rewrite — VERDICT r4 #1)."""
         snap = self.snapshot()
-        debt = self._bucket_debt(snap)
+        debt = bucket_debt(snap)
         over = [
             (b, d) for b, d in debt.items()
             if d["files"] > max_files_per_bucket
@@ -2026,8 +1685,7 @@ class LakeTable:
         bucket's base∪delta is a complete LWW resolution for its keys.
         This is what keeps maintenance pauses bounded at 10^10-event
         scale: a debt trip rewrites the debt-heavy buckets, never the
-        table (VERDICT r4 #1 — the inline full-table rewrite was the one
-        remaining scale-killer).
+        table.
 
         ``n_buckets`` rescales the hash-bucket layout in the same commit
         (partition-spec evolution): a table that outgrew its bucket count
@@ -2037,36 +1695,29 @@ class LakeTable:
         ranges both derive from the snapshot's ``n_buckets``, so the
         switch is atomic with the data rewrite).  A rescale moves keys
         across buckets, so it is inherently full-table: the two knobs
-        are mutually exclusive."""
+        are mutually exclusive.
+
+        ``plan_compact`` decides the selection and the file layout, with
+        the same slicing and placement rules as a merge write."""
         if n_buckets is not None and buckets is not None:
             raise ValueError("bucket rescale is full-table: pass one of "
                              "n_buckets / buckets, not both")
         snap = self.snapshot()
+        plan = plan_compact(
+            snap, buckets, n_buckets, self.spark.sparkContext.defaultParallelism
+        )
+        if plan is None:  # nothing selected: no-op
+            return {
+                "files_before": len(snap.files),
+                "delta_files_folded": 0,
+                "files_after": len(snap.files),
+                "n_buckets": snap.n_buckets,
+                "buckets": [],
+                "rewrote_bytes": 0,
+            }
         new_snap = self._child(snap)
         if n_buckets is not None:
             new_snap.n_buckets = n_buckets
-        if buckets is None:
-            sel_base, carried = list(snap.files), []
-            sel_delta, carried_delta = list(snap.delta_files), []
-        else:
-            bset = set(buckets)
-            sel_base = [e for e in snap.files if set(e.buckets) & bset]
-            carried = [e for e in snap.files if not (set(e.buckets) & bset)]
-            sel_delta = [
-                e for e in snap.delta_files if set(e.buckets) & bset
-            ]
-            carried_delta = [
-                e for e in snap.delta_files if not (set(e.buckets) & bset)
-            ]
-            if not (sel_base or sel_delta):  # nothing selected: no-op
-                return {
-                    "files_before": len(snap.files),
-                    "delta_files_folded": 0,
-                    "files_after": len(snap.files),
-                    "n_buckets": snap.n_buckets,
-                    "buckets": [],
-                    "rewrote_bytes": 0,
-                }
         # Delta files spanning buckets OUTSIDE the selection (small deltas
         # are written as one multi-bucket file) must be SPLIT, not folded
         # whole: folding their out-of-set rows would emit those rows as
@@ -2077,102 +1728,47 @@ class LakeTable:
         # remainder is rewritten as a single fresh leftover delta file,
         # which also collapses the partial files' pending chain into one
         # file as a side effect.
-        dread = self._read_files(snap, sel_delta)
+        dread = self._read_files(snap, plan.sel_delta)
         leftover_entries: list[FileEntry] = []
-        if buckets is not None:
+        if plan.partial:
             bexpr_old = self._bucket_expr(snap)  # layout unchanged here
             in_sel = bexpr_old.isin(*sorted(set(buckets)))
-            partial = [e for e in sel_delta if set(e.buckets) - set(buckets)]
-            if partial:
-                dread = dread.filter(in_sel)
-                lrel = os.path.join(
-                    "data", f"dleft-{uuid.uuid4().hex[:8]}"
-                )
-                lbuckets = sorted(
-                    {b for e in partial for b in e.buckets} - set(buckets)
-                )
-                leftover_entries = self._write_delta_single(
-                    self._read_files(snap, partial).filter(~in_sel),
-                    lrel,
-                    lbuckets,
-                    bexpr_old,
-                )
-                if leftover_entries and leftover_entries[0].rows == 0:
-                    shutil.rmtree(
-                        os.path.join(self.root, lrel), ignore_errors=True
-                    )
-                    leftover_entries = []
-        n_out = (
-            max(1, len({b for e in sel_base + sel_delta for b in e.buckets}))
-            if n_buckets is None
-            else n_buckets + len(new_snap.hot_repos) * new_snap.salt
-        )
-        # bounded file sizes (same contract as the merge write): fat
-        # buckets split into ~max_file_bytes slices.  Under a rescale the
-        # old per-bucket byte map doesn't apply to the NEW layout — slice
-        # uniformly from the total instead (hash layouts spread evenly).
-        max_fb = int(snap.properties.get("max_file_bytes", str(512 << 20)))
-        total_bytes = sum(e.bytes for e in sel_base + sel_delta)
-        min_par = self.spark.sparkContext.defaultParallelism
-        if n_buckets is None:
-            bb: dict[int, int] = {}
-            for e in sel_base + sel_delta:
-                share = e.bytes // max(1, len(e.buckets))
-                for b in e.buckets:
-                    bb[b] = bb.get(b, 0) + share
-            slice_expr, extra, cks = self._file_slice_expr(
-                bb, max_fb, min_parallel=min_par
+            dread = dread.filter(in_sel)
+            lrel = os.path.join("data", f"dleft-{uuid.uuid4().hex[:8]}")
+            leftover_entries = self._write_delta_single(
+                self._read_files(snap, plan.partial).filter(~in_sel),
+                lrel,
+                plan.leftover_buckets,
+                bexpr_old,
             )
-            spans = {b for e in sel_base + sel_delta for b in e.buckets}
-            comp_buckets = sorted(
-                spans if buckets is None else spans & set(buckets)
-            )
-        else:
-            k = max(1, -(-total_bytes // (n_out * max_fb)))
-            slice_expr = (
-                F.pmod(F.xxhash64(F.col("path")), F.lit(k)).cast("int")
-                if k > 1
-                else F.lit(0)
-            )
-            extra = n_out * (k - 1)
-            comp_buckets = list(range(n_out))
-            cks = {b: k for b in comp_buckets} if k > 1 else {}
-        # collision-free (bucket, slice) placement for the rewrite
-        # (same rationale as the merge writer: even task waves)
+            if leftover_entries and leftover_entries[0].rows == 0:
+                shutil.rmtree(os.path.join(self.root, lrel), ignore_errors=True)
+                leftover_entries = []
         rel_dir = os.path.join("data", f"compact-{uuid.uuid4().hex[:8]}")
-        (
+        new_entries = self._write_bucketed(
             self._latest_rows(
-                [self._read_files(snap, sel_base), dread],
+                [self._read_files(snap, plan.sel_base), dread],
                 snap.columns,
                 self._bucket_expr(new_snap),
-                slice_expr,
-                self._placement_expr(comp_buckets, cks),
-                n_out + extra,
-            )
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(self.root, rel_dir))
+                plan.layout,
+            ),
+            rel_dir,
+            None,
         )
-        new_entries = self._scan_written(rel_dir)
-        new_snap.files = carried + new_entries
-        new_snap.delta_files = carried_delta + leftover_entries
+        new_snap.files = plan.carried + new_entries
+        new_snap.delta_files = plan.carried_delta + leftover_entries
         new_snap.op = "compact"
         self.log.commit(new_snap, expect_parent=snap.version)
         return {
             "files_before": len(snap.files),
-            "delta_files_folded": len(sel_delta),
+            "delta_files_folded": len(plan.sel_delta),
             "files_after": len(new_snap.files),
             "n_buckets": new_snap.n_buckets,
             # targeted mode reports the FOLDED selection — a partially-
             # selected multi-bucket delta file's other buckets were split
             # into the leftover, not folded
-            "buckets": sorted(
-                set(buckets)
-                & {b for e in sel_base + sel_delta for b in e.buckets}
-            )
-            if buckets is not None
-            else sorted({b for e in sel_base + sel_delta for b in e.buckets}),
-            "rewrote_bytes": total_bytes,
+            "buckets": plan.folded,
+            "rewrote_bytes": plan.rewrite_bytes,
         }
 
     def rollback(self, version: int | str) -> dict:

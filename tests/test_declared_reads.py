@@ -19,6 +19,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from etl_spark.catalog import plan
 from etl_spark.catalog.table import LakeTable
 from etl_spark.fixtures import events_df
 from etl_spark.functions.xxhash import cold_bucket
@@ -168,12 +169,10 @@ def test_promotion_boundary_reads_null_in_older_files(spark, tmp_path):
 
 @pytest.mark.parametrize("stage_small_rows", [25_000, 0])  # both stage media
 def test_non_string_column_is_refused_before_any_write(
-    spark, tmp_path, stage_small_rows
+    spark, tmp_path, monkeypatch, stage_small_rows
 ):
-    t = LakeTable.create(
-        spark, str(tmp_path / "lake"), n_buckets=4, salt=2,
-        stage_small_rows=stage_small_rows,
-    )
+    monkeypatch.setattr(plan, "STAGE_SMALL_ROWS", stage_small_rows)
+    t = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4, salt=2)
     ev = events_df(spark, 200, n_repos=4, paths_per_repo=10)
     t.apply_batch(canonicalize(ev.filter(F.col("seq") < 100)), 0)
 

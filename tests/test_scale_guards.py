@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_spark.catalog.plan import plan_layout
 from etl_spark.catalog.table import LakeTable
 from etl_spark.fixtures import events_df
 from etl_spark.functions.xxhash import cold_bucket, xxhash64
@@ -210,22 +211,16 @@ def test_placement_tokens_land_exact(spark):
         assert all(got[toks[i]] == i for i in range(n)), n
 
 
-def test_slice_parallelism_floor(spark):
-    """min_parallel slices the largest buckets first and respects the
-    16MB small-file floor."""
-    # driver-only helper, no table; its Column expressions still need
-    # the session's SparkContext (hence the fixture)
-    t = LakeTable.__new__(LakeTable)
+def test_slice_parallelism_floor():
+    """The parallelism floor slices the largest buckets first and
+    respects the 16MB small-file floor."""
     bb = {0: 100 << 20, 1: 40 << 20, 2: 10 << 20}
-    _, extra, ks = LakeTable._file_slice_expr(
-        t, bb, max_bytes=512 << 20, min_parallel=6
-    )
+    ks = plan_layout(bb, bb, max_file_bytes=512 << 20, parallelism=6).ks
     # 3 groups -> floor 6: bucket 0 (largest per-slice) splits first
     assert sum(ks.get(b, 1) for b in bb) == 6
     assert ks[0] >= ks.get(1, 1) >= ks.get(2, 1)
     # never slices below ~16MB per slice
     for b, k in ks.items():
         assert bb[b] // k >= 16 << 20 or k == 1
-    # floor off -> no slicing below max_bytes
-    _, extra0, ks0 = LakeTable._file_slice_expr(t, bb, max_bytes=512 << 20)
-    assert ks0 == {} and extra0 == 0
+    # floor off -> no slicing below max_file_bytes
+    assert plan_layout(bb, bb, max_file_bytes=512 << 20, parallelism=0).ks == {}

@@ -332,16 +332,19 @@ def test_vacuum_grace_spares_inflight_commit_artifacts(spark, tmp_path):
     assert not os.path.exists(tmp_manifest)
 
 
-def test_stage_mediums_produce_identical_state(spark, tmp_path):
+def test_stage_mediums_produce_identical_state(spark, tmp_path, monkeypatch):
     """Small batches stage the LWW winners via localCheckpoint, big ones
     via a parquet round-trip; the two mediums must be invisible to the
-    result.  stage_small_rows=0 forces every batch down the parquet path;
+    result.  STAGE_SMALL_ROWS=0 forces every batch down the parquet path;
     the default routes these small batches through the checkpoint path."""
+    from etl_spark.catalog import plan
+
     ev = events_df(spark, 600, n_repos=5, paths_per_repo=12)
     halves = [ev.filter(F.col("seq") < 300), ev.filter(F.col("seq") >= 300)]
     states = {}
-    for name, kw in [("ckpt", {}), ("parquet", {"stage_small_rows": 0})]:
-        t = LakeTable.create(spark, str(tmp_path / name), n_buckets=4, salt=2, **kw)
+    for name, small_rows in [("ckpt", plan.STAGE_SMALL_ROWS), ("parquet", 0)]:
+        monkeypatch.setattr(plan, "STAGE_SMALL_ROWS", small_rows)
+        t = LakeTable.create(spark, str(tmp_path / name), n_buckets=4, salt=2)
         for bid, h in enumerate(halves):
             t.apply_batch(canonicalize(h), bid)
         states[name] = t.read().select("repo", "path", "commit", "content_sha")
