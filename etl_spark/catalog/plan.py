@@ -58,7 +58,6 @@ class BatchPlan:
     slice_delta: list[FileEntry]
     carried_delta: list[FileEntry]
     use_mor: bool
-    strategy: str  # broadcast | shuffle | mor-delta
     single_file: bool  # the delta is one multi-bucket file, no kernel
     layout: Layout
     observe_stats: bool  # new-file stats ride the write; else a scan
@@ -202,7 +201,6 @@ def plan_batch(
     facts: BatchFacts,
     parallelism: int,
     mode: str | None = None,
-    strategy: str = "auto",
 ) -> BatchPlan:
     """Everything ``apply_batch`` decides once the batch is staged."""
     props = snap.properties
@@ -255,17 +253,6 @@ def plan_batch(
         and bool(slice_base)
         and (mode == "mor" or slice_rows > mor_min_amp * max(1, d_count))
     )
-    if strategy == "auto":
-        # broadcasting the delta ships it through the driver once — only
-        # sane when the payload is genuinely small
-        thr = int(props.get("broadcast_threshold_rows", "2000000"))
-        thr_bytes = int(props.get("broadcast_threshold_bytes", str(64 << 20)))
-        strategy = (
-            "broadcast" if d_count <= thr and delta_bytes <= thr_bytes
-            else "shuffle"
-        )
-    if use_mor:
-        strategy = "mor-delta"
     # Small merge-on-read deltas are ONE multi-bucket file: one file per
     # touched bucket would add n_buckets tiny files per steady-state
     # batch, so the delta-file debt cap would trip every few batches and
@@ -297,7 +284,7 @@ def plan_batch(
     )
     return BatchPlan(
         sorted(touched), sorted(batch_buckets), slice_base, carried,
-        slice_delta, carried_delta, use_mor, strategy, single_file, layout,
+        slice_delta, carried_delta, use_mor, single_file, layout,
         observe_stats, d_count,
     )
 

@@ -16,27 +16,25 @@ Storage model
   set intersects the batch's touched buckets; everything else is carried
   forward by reference in the manifest.
 
-Merge strategies (auto-selected per batch)
-------------------------------------------
-- ``broadcast`` (delta small — the steady-state CDC case): the touched
-  slice is LEFT-joined against the broadcast delta (NO shuffle of the
-  big side; one full scan + one key-column-only scan), new keys appended.
-- ``shuffle`` (delta large — backfills/initial load): target slice and
-  delta go straight into the rewrite kernel.
-Either way every rewritten file comes out of ONE kernel
-(``_latest_rows``): one placement shuffle, then keep the latest row per
-key in the sort the writer consumes.  Compaction and delta folds use the
-same kernel.
+The rewrite kernel
+------------------
+Every rewritten file comes out of ONE kernel (``_latest_rows``): the
+touched slice and the batch's rows are unioned, shuffled once into
+their (bucket, slice) placement, and the latest row per key is kept in
+the sort the writer consumes.  Big merge-on-read deltas, compaction and
+delta folds use the same kernel.  There is no broadcast-join merge for
+small batches: the placement shuffle would run after it anyway, so it
+only added jobs.
 
 Batch planning
 --------------
 The planner decides, the executor runs.  Every decision of a write —
 stage medium, histogram source, the rewrite's bucket closure and its
-rewritten/carried files, CoW vs MoR, broadcast vs shuffle, delta file vs
-kernel, file slices and placement, write-time stats vs a scan, the
-inline debt fold — is made by ``etl_spark.catalog.plan`` from the
-manifest and a few measured facts, without Spark.  ``apply_batch`` and
-``compact`` measure, ask the planner, and run exactly its plan.
+rewritten/carried files, CoW vs MoR, delta file vs kernel, file slices
+and placement, write-time stats vs a scan, the inline debt fold — is
+made by ``etl_spark.catalog.plan`` from the manifest and a few measured
+facts, without Spark.  ``apply_batch`` and ``compact`` measure, ask the
+planner, and run exactly its plan.
 
 Scale notes (100 TB / 1000 executors): the only per-batch driver state is
 the manifest (file entries) and the watermark vector.  Steady-state file
@@ -141,8 +139,6 @@ class LakeTable:
         n_buckets: int = 16,
         salt: int = 8,
         hot_repos: list[str] | None = None,
-        broadcast_threshold_rows: int = 2_000_000,
-        broadcast_threshold_bytes: int = 64 << 20,
         hot_frac: float = 0.30,
         hot_min_rows: int = 10_000,
         repo_stats_topk: int = 200,
@@ -170,8 +166,6 @@ class LakeTable:
             salt=salt,
             hot_repos=list(hot_repos or []),
             properties={
-                "broadcast_threshold_rows": str(broadcast_threshold_rows),
-                "broadcast_threshold_bytes": str(broadcast_threshold_bytes),
                 "hot_frac": str(hot_frac),
                 "hot_min_rows": str(hot_min_rows),
                 "repo_stats_topk": str(repo_stats_topk),
@@ -391,7 +385,6 @@ class LakeTable:
         batch_df: DataFrame,
         batch_id: int,
         delivery: str = "ordered",
-        strategy: str = "auto",
         canonicalizer=None,
         mode: str | None = None,
         set_properties: dict[str, str] | None = None,
@@ -452,13 +445,13 @@ class LakeTable:
         stage_dir = os.path.join(self.root, stage_rel)
         try:
             return self._apply_inner(
-                d0, d, batch_id, snap, strategy, t0, stage_dir, canonicalizer,
-                mode, set_properties,
+                d0, d, batch_id, snap, t0, stage_dir, canonicalizer, mode,
+                set_properties,
             )
         finally:
             shutil.rmtree(stage_dir, ignore_errors=True)
 
-    def _apply_inner(self, d0, d, batch_id, snap, strategy, t0, stage_dir,
+    def _apply_inner(self, d0, d, batch_id, snap, t0, stage_dir,
                      canonicalizer=None, mode=None, set_properties=None) -> dict:
         """Measure the batch's facts, let ``plan_batch`` decide, run
         exactly that plan, commit."""
@@ -513,8 +506,7 @@ class LakeTable:
         mark("bucket_job")
 
         plan = plan_batch(
-            snap, facts, self.spark.sparkContext.defaultParallelism, mode,
-            strategy,
+            snap, facts, self.spark.sparkContext.defaultParallelism, mode
         )
         if new_cols:
             new_snap.columns = all_cols
@@ -540,12 +532,7 @@ class LakeTable:
             inputs = [delta_rows]
             slice_files = plan.slice_base + plan.slice_delta
             if not plan.use_mor and slice_files:
-                slice_df = self._read_files(new_snap, slice_files)
-                inputs = (
-                    [self._merge_broadcast(slice_df, staged, delta_rows, all_cols)]
-                    if plan.strategy == "broadcast"
-                    else [slice_df, delta_rows]
-                )
+                inputs = [self._read_files(new_snap, slice_files), delta_rows]
             new_entries = self._write_bucketed(
                 self._latest_rows(inputs, all_cols, bucket, plan.layout),
                 rel_dir,
@@ -591,7 +578,6 @@ class LakeTable:
             "events": n_events,
             "repo_stat_rows": len(repo_rows),
             "delta_keys": plan.delta_keys,
-            "strategy": plan.strategy,
             "mode": "mor" if plan.use_mor else "cow",
             "touched_buckets": plan.touched,
             "rewrote_files": 0 if plan.use_mor else len(plan.slice_base),
@@ -753,44 +739,6 @@ class LakeTable:
                 out = out.withColumn(c, F.lit(None).cast("string"))
         return out.select(*all_cols)
 
-    def _merge_broadcast(
-        self, slice_df: DataFrame, d: DataFrame, delta_rows: DataFrame,
-        all_cols: list[str],
-    ) -> DataFrame:
-        """Steady-state path: NO shuffle of the target slice.
-
-        1. slice LEFT JOIN broadcast(delta-rows)  -> survivors + in-place
-           winners (delta wins iff strictly higher seq; ties keep target —
-           idempotent re-delivery).
-        2. key-column-only scan of the slice semi-joined to delta ->
-           matched keys (small) -> anti-join gives brand-new keys.
-
-        ``slice_df`` may hold several rows per key (base plus unresolved
-        pending deltas): each is resolved against the batch on its own,
-        and the rewrite kernel keeps the latest."""
-        dr = delta_rows.select(
-            *KEY_COLUMNS,
-            *[F.col(c).alias(f"_d_{c}") for c in all_cols if c not in KEY_COLUMNS],
-        )
-        joined = slice_df.join(F.broadcast(dr), KEY_COLUMNS, "left")
-        take = F.col("_d__ingest_seq").isNotNull() & (
-            F.col("_d__ingest_seq") > F.col("_ingest_seq")
-        )
-        resolved = joined.select(
-            *KEY_COLUMNS,
-            *[
-                F.when(take, F.col(f"_d_{c}")).otherwise(F.col(c)).alias(c)
-                for c in all_cols
-                if c not in KEY_COLUMNS
-            ],
-        )
-
-        matched = slice_df.select(*KEY_COLUMNS).join(
-            F.broadcast(d.select(*KEY_COLUMNS)), KEY_COLUMNS, "left_semi"
-        )
-        news = delta_rows.join(F.broadcast(matched), KEY_COLUMNS, "left_anti")
-        return resolved.unionByName(news)
-
     @staticmethod
     def _slice_expr(ks: dict[int, int]):
         """The ``_slice`` column of ``Layout.ks``: a path-hash slice id in
@@ -857,8 +805,8 @@ class LakeTable:
         copy-on-write pruning stays exact.
 
         The first row per key is kept even for one input that is
-        already key-unique (a fresh table's first write, broadcast-merge
-        output, a big delta), so there is one code path.
+        already key-unique (a fresh table's first write, a big delta),
+        so there is one code path.
 
         ``_batch_id`` ASC is the right tie-break for merges too:
         ``apply_batch`` fences every ``batch_id <= last_batch_id``,
@@ -1056,7 +1004,7 @@ class LakeTable:
     def _row_bytes_expr(df: DataFrame):
         """Uncompressed payload estimate per row.  Counts EVERY string
         column (not just content): wide promoted ``extra`` columns would
-        otherwise undercount the broadcast decision."""
+        otherwise undercount file slicing and the one-file delta test."""
         str_cols = [
             f.name
             for f in df.schema.fields
@@ -1071,7 +1019,7 @@ class LakeTable:
         """Per-bucket (rows, bytes) over the staged LWW winners.
 
         Doubles as the delta-key count AND the delta payload size
-        (drives broadcast-vs-shuffle and file slicing); it reads the RAW
+        (drives file slicing and the one-file delta test); it reads the RAW
         stage so the canonicalize pipeline is not re-triggered (raw
         content length ≈ canonical length for sizing purposes).  On the
         big-batch path these numbers ride the stage write as observe

@@ -1,20 +1,14 @@
 """Commit-ordered last-write-wins dedup (BASELINE.json:6).
 
-Two forms, selectable per call:
+``lww_latest`` is row_number() over (key ORDER BY seq DESC, part_id
+DESC) == 1.  Sort-based — one shuffle by key, rows stream through the
+sort with no per-key buffering.  Measured to scale cleanly with cores
+on wide rows (KB contents): at 32 threads a max_by hash aggregation
+was 2.5x slower because every partial-agg buffer holds a full row
+struct (allocation/GC churn grows with thread count).
 
-- ``window`` (default): row_number() over (key ORDER BY seq DESC,
-  part_id DESC) == 1.  Sort-based — one shuffle by key, rows stream
-  through the sort with no per-key buffering.  Measured to scale
-  cleanly with cores on wide rows (KB contents): at 32 threads the
-  hash-agg alternative was 2.5x slower because every partial-agg
-  buffer holds a full row struct (allocation/GC churn grows with
-  thread count).
-
-- ``maxby``: single hash aggregation with ``max_by`` over a struct.
-  Map-side partial aggregation collapses hot keys BEFORE the shuffle —
-  wins when a batch has MANY events per key (update-heavy streams,
-  replay compaction) and rows are narrow.  Loses on ~1-event-per-key
-  batches with wide contents.
+``lww_latest_firstvalue`` is SURVEY §2.5's first_value form, kept as
+an independent equivalence witness, not used on any hot path.
 
 Tie handling: within a batch the dedup key (part_id, seq) is unique,
 so ordering by (seq DESC, part_id DESC) is a total order — both forms
@@ -27,20 +21,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def lww_latest(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str = "seq",
-    strategy: str = "window",
-) -> DataFrame:
-    """Keep the winning (highest-``order_col``) row per key."""
-    if strategy == "maxby":
-        return lww_latest_maxby(df, keys, order_col)
-    if strategy == "firstvalue":
-        return lww_latest_firstvalue(df, keys, order_col)
-    return lww_latest_window(df, keys, order_col)
-
-
 def _order(df: DataFrame, order_col: str):
     order = [F.desc(order_col)]
     if "part_id" in df.columns and order_col != "part_id":
@@ -48,7 +28,8 @@ def _order(df: DataFrame, order_col: str):
     return order
 
 
-def lww_latest_window(df: DataFrame, keys: list[str], order_col: str = "seq") -> DataFrame:
+def lww_latest(df: DataFrame, keys: list[str], order_col: str = "seq") -> DataFrame:
+    """Keep the winning (highest-``order_col``) row per key."""
     w = Window.partitionBy(*keys).orderBy(*_order(df, order_col))
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -67,7 +48,7 @@ def lww_latest_firstvalue(
     Strictly more work than the row_number form in Spark (the dedup adds
     a second shuffle), so it is NOT used on the hot path — it exists for
     engines/plans where a filterable rank is costlier than first_value,
-    and as the equivalence witness for the window form.
+    and as the equivalence witness for ``lww_latest``.
     """
     w = (
         Window.partitionBy(*keys)
@@ -79,15 +60,3 @@ def lww_latest_firstvalue(
         *keys, *[F.first(c, ignorenulls=False).over(w).alias(c) for c in others]
     )
     return out.dropDuplicates(keys)
-
-
-def lww_latest_maxby(df: DataFrame, keys: list[str], order_col: str = "seq") -> DataFrame:
-    others = [c for c in df.columns if c not in keys]
-    ordering = [F.col(order_col)]
-    if "part_id" in df.columns and order_col != "part_id":
-        ordering.append(F.col("part_id"))
-    packed = F.max_by(
-        F.struct(*[F.col(c) for c in others]), F.struct(*ordering)
-    ).alias("_w")
-    out = df.groupBy(*keys).agg(packed)
-    return out.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in others])

@@ -4,7 +4,9 @@ Per-batch fixed cost is mostly job count: a 90-event tail batch moves
 almost no data, so every extra job is latency.  These tests pin how many
 jobs one steady merge-on-read batch and one small copy-on-write batch
 launch, so a change cannot add a job without editing a number here.
-The ceilings are the counts measured when they were written."""
+Each ceiling is the count measured, twice, when it was last set; the
+copy-on-write count was set when that batch's merge became the rewrite
+kernel alone (slice and batch rows straight into ``_latest_rows``)."""
 
 from __future__ import annotations
 
@@ -18,7 +20,7 @@ from tests.test_declared_reads import _jobs_while
 BASE_EVENTS = 4000
 TAIL_EVENTS = 90
 MOR_BATCH_JOBS = 9
-COW_BATCH_JOBS = 12
+COW_BATCH_JOBS = 9
 
 
 def _table(spark, root, **props):
@@ -44,7 +46,7 @@ def test_steady_mor_batch_job_count(spark, tmp_path):
     jobs, st = _jobs_while(
         spark, lambda: t.apply_batch(_tail(ev, 1), 2, canonicalizer=canonicalize)
     )
-    assert st["mode"] == "mor" and st["strategy"] == "mor-delta"
+    assert st["mode"] == "mor"
     assert not st["compacted"]
     assert len(jobs) <= MOR_BATCH_JOBS, len(jobs)
 
@@ -55,5 +57,5 @@ def test_small_cow_batch_job_count(spark, tmp_path):
     jobs, st = _jobs_while(
         spark, lambda: t.apply_batch(_tail(ev, 1), 2, canonicalizer=canonicalize)
     )
-    assert st["mode"] == "cow" and st["strategy"] == "broadcast"
+    assert st["mode"] == "cow"
     assert len(jobs) <= COW_BATCH_JOBS, len(jobs)

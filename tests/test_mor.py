@@ -8,7 +8,6 @@ merge work happens (read-time vs write-time), never the result.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.catalog.table import LakeTable
@@ -298,8 +297,7 @@ def test_mor_vacuum_keeps_pending_delta_files(spark, tmp_path):
     )
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
-def test_seq_tie_resolution_matches_cow(spark, tmp_path, strategy):
+def test_seq_tie_resolution_matches_cow(spark, tmp_path):
     """ADVICE r3: a producer violating seq uniqueness (same seq, distinct
     payloads, delivered in different batches) must resolve to the SAME
     winner under MoR read-time resolution, CoW merge, a CoW batch that
@@ -324,7 +322,7 @@ def test_seq_tie_resolution_matches_cow(spark, tmp_path, strategy):
         )
         for bid, rows in enumerate([rows_a, rows_b]):
             t.apply_batch(batch(rows), bid, delivery="unordered",
-                          canonicalizer=canonicalize, strategy=strategy)
+                          canonicalizer=canonicalize)
         return t
 
     def commit_of(t, path="src/a.py"):
@@ -336,9 +334,8 @@ def test_seq_tie_resolution_matches_cow(spark, tmp_path, strategy):
 
     fold = mk("mor", "_fold")
     st = fold.apply_batch(batch(rows_c), 2, delivery="unordered",
-                          canonicalizer=canonicalize, strategy=strategy,
-                          mode="cow")
-    assert st["mode"] == "cow" and st["strategy"] == strategy
+                          canonicalizer=canonicalize, mode="cow")
+    assert st["mode"] == "cow"
     assert not fold.snapshot().delta_files, "the CoW batch must fold the delta"
     assert commit_of(fold) == "c1" and commit_of(fold, "src/b.py") == "c3"
 

@@ -5,11 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_spark.functions.hashing import key_bucket
-from etl_spark.operators.lww import (
-    lww_latest,
-    lww_latest_firstvalue,
-    lww_latest_window,
-)
+from etl_spark.operators.lww import lww_latest, lww_latest_firstvalue
 from etl_spark.operators.watermark import (
     admission_filter,
     batch_high_watermarks,
@@ -34,14 +30,6 @@ def test_lww_latest_keeps_max_seq(spark):
     out = lww_latest(_events(spark), ["repo", "path"], "seq")
     got = {(r["repo"], r["path"]): (r["seq"], r["content"]) for r in out.collect()}
     assert got == {("a", "p1"): (5, "v5"), ("b", "p1"): (2, "v2"), ("b", "p2"): (4, "v4")}
-
-
-def test_lww_window_form_agrees(spark):
-    df = _events(spark)
-    cols = df.columns
-    a = lww_latest(df, ["repo", "path"]).select(*cols).orderBy("repo", "path").collect()
-    b = lww_latest_window(df, ["repo", "path"]).select(*cols).orderBy("repo", "path").collect()
-    assert a == b
 
 
 def test_lww_firstvalue_form_agrees(spark):

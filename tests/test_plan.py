@@ -81,8 +81,7 @@ def batches(draw):
         new_cols=draw(st.sampled_from([[], ["branch"]])),
     )
     mode = draw(st.sampled_from([None, "cow", "mor", "auto"]))
-    strategy = draw(st.sampled_from(["auto", "broadcast", "shuffle"]))
-    return snap, facts, draw(st.integers(0, 64)), mode, strategy
+    return snap, facts, draw(st.integers(0, 64)), mode
 
 
 def _paths(entries):
@@ -103,8 +102,8 @@ def test_plan_imports_no_pyspark():
 @batch_examples
 @given(batches())
 def test_slice_and_carried_partition_the_files(b):
-    snap, facts, par, mode, strategy = b
-    p = plan_batch(snap, facts, par, mode, strategy)
+    snap, facts, par, mode = b
+    p = plan_batch(snap, facts, par, mode)
     for sel, kept, every in [
         (p.slice_base, p.carried, snap.files),
         (p.slice_delta, p.carried_delta, snap.delta_files),
@@ -118,8 +117,8 @@ def test_slice_and_carried_partition_the_files(b):
 @batch_examples
 @given(batches())
 def test_folded_deltas_lie_inside_touched(b):
-    snap, facts, par, mode, strategy = b
-    p = plan_batch(snap, facts, par, mode, strategy)
+    snap, facts, par, mode = b
+    p = plan_batch(snap, facts, par, mode)
     assert set(p.batch_buckets) <= set(p.touched)
     for e in p.slice_delta:
         assert set(e.buckets) <= set(p.touched), (e.buckets, p.touched)
@@ -128,19 +127,18 @@ def test_folded_deltas_lie_inside_touched(b):
 @batch_examples
 @given(batches())
 def test_mor_never_promotes_evolves_or_writes_an_empty_slice(b):
-    snap, facts, par, mode, strategy = b
-    p = plan_batch(snap, facts, par, mode, strategy)
+    snap, facts, par, mode = b
+    p = plan_batch(snap, facts, par, mode)
     if facts.promoted or facts.new_cols or not p.slice_base:
         assert not p.use_mor
-    assert (p.strategy == "mor-delta") == p.use_mor
     assert not p.single_file or p.use_mor
 
 
 @batch_examples
 @given(batches())
 def test_observe_stats_only_on_the_one_file_per_bucket_layout(b):
-    snap, facts, par, mode, strategy = b
-    p = plan_batch(snap, facts, par, mode, strategy)
+    snap, facts, par, mode = b
+    p = plan_batch(snap, facts, par, mode)
     if p.observe_stats:
         assert not p.layout.ks and not facts.promoted and not p.single_file
         assert len(p.touched) <= OBSERVE_MAX_BUCKETS
@@ -171,8 +169,8 @@ def test_layout_slices_bound_file_sizes(by_bucket, max_fb, par, exact):
 @batch_examples
 @given(batches())
 def test_apply_partitions_stay_under_the_writer_cap(b):
-    snap, facts, par, mode, strategy = b
-    layout = plan_batch(snap, facts, par, mode, strategy).layout
+    snap, facts, par, mode = b
+    layout = plan_batch(snap, facts, par, mode).layout
     assert 1 <= layout.npart <= WRITER_MAX_PARTS
     assert layout.pairs is None or len(layout.pairs) <= WRITER_MAX_PARTS
 

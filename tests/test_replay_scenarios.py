@@ -9,7 +9,6 @@ executable stand-in for the reference final state (SURVEY.md §0)."""
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.catalog.table import LakeTable
@@ -183,16 +182,15 @@ def test_unordered_delete_then_late_upsert(spark, tmp_path):
     assert t.read(include_tombstones=True).count() == 1
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
-def test_merge_strategies_agree(spark, tmp_path, strategy):
-    """Both merge strategies reach the oracle state, for in-order halves
+def test_cow_merges_match_oracle(spark, tmp_path):
+    """Copy-on-write merges reach the oracle state, for in-order halves
     and for out-of-order, re-delivered and seq-tied batches (every
     batch after the first merges through the rewrite kernel)."""
     ev = events_df(spark, 700, n_repos=6, paths_per_repo=15)
-    t = LakeTable.create(spark, str(tmp_path / f"lake-{strategy}"), n_buckets=4, salt=2)
+    t = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4, salt=2)
     for b, (lo, hi) in enumerate([(0, 350), (350, 700)]):
         chunk = ev.filter((F.col("seq") >= lo) & (F.col("seq") < hi))
-        t.apply_batch(canonicalize(chunk), b, strategy=strategy)
+        t.apply_batch(canonicalize(chunk), b)
     _assert_state_equal(_final_state(t), replay_events(ev.toPandas()))
 
     ev = events_df(
@@ -204,9 +202,9 @@ def test_merge_strategies_agree(spark, tmp_path, strategy):
         ev.filter("seq % 3 = 2").union(ev.limit(300)),  # out of order + redelivery
         ev.limit(500),  # pure duplicates incl. seq ties
     ]
-    t = LakeTable.create(spark, str(tmp_path / f"redeliver-{strategy}"), n_buckets=8, salt=4)
+    t = LakeTable.create(spark, str(tmp_path / "redeliver"), n_buckets=8, salt=4)
     for b, chunk in enumerate(batches):
         st = t.apply_batch(chunk, b, delivery="unordered",
-                           canonicalizer=canonicalize, strategy=strategy)
-        assert st["strategy"] == strategy, st
+                           canonicalizer=canonicalize)
+        assert st["mode"] == "cow", st
     _assert_state_equal(_final_state(t), replay_events(ev.toPandas()))

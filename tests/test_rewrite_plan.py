@@ -60,16 +60,12 @@ def _debt_table(spark, root):
     return t, ev
 
 
-@pytest.mark.parametrize("strategy", ["shuffle", "broadcast"])
-def test_cow_fold_writes_through_one_exchange(spark, tmp_path, writes, strategy):
+def test_cow_fold_writes_through_one_exchange(spark, tmp_path, writes):
     t, ev = _debt_table(spark, str(tmp_path / "t"))
     mor, _ = _debt_table(spark, str(tmp_path / "mor"))
     writes.clear()
-    st = t.apply_batch(
-        canonicalize(ev.filter(F.col("seq") >= 700)), 3, mode="cow",
-        strategy=strategy,
-    )
-    assert st["mode"] == "cow" and st["strategy"] == strategy
+    st = t.apply_batch(canonicalize(ev.filter(F.col("seq") >= 700)), 3, mode="cow")
+    assert st["mode"] == "cow"
     assert not t.snapshot().delta_files  # the slice's deltas were folded
     (df,) = [df for d, df in writes if d.startswith("b00000003-")]
     assert _plan_counts(df) == (1, 1)

@@ -2,10 +2,10 @@
 against the serial oracle.
 
 A hypothesis ``RuleBasedStateMachine`` drives one tiny table through
-``apply_batch`` (copy-on-write / merge-on-read / auto x broadcast /
-shuffle x ordered / unordered delivery, with re-delivered duplicates,
-out-of-order seqs and seq ties across source partitions, and now and
-then an already-fenced batch id), ``compact`` (targeted — including a
+``apply_batch`` (copy-on-write / merge-on-read / auto x ordered /
+unordered delivery, with re-delivered duplicates, out-of-order seqs and
+seq ties across source partitions, and now and then an already-fenced
+batch id), ``compact`` (targeted — including a
 partial multi-bucket delta —, full, and bucket rescale) and
 ``rollback``.  A model tracks, per committed version, the admitted
 events, the watermark vector and the fence.  After every step:
@@ -101,7 +101,7 @@ class TableMachine(RuleBasedStateMachine):
                 (r, p) for r in REPOS for p in PATHS
             )
         ]
-        self._apply(rows, "cow", "shuffle", "ordered")
+        self._apply(rows, "cow", "ordered")
 
     def _event(self, part: int, repo: str, path: str, op: str, variant: int,
                off: int = 1) -> dict:
@@ -139,7 +139,7 @@ class TableMachine(RuleBasedStateMachine):
             and any(cold_bucket(r, snap.n_buckets) in s for s in spans)
         ]
 
-    def _apply(self, rows, mode, strategy, delivery, stale=False):
+    def _apply(self, rows, mode, delivery, stale=False):
         model = self.states[self.version]
         if stale:
             # a re-delivered batch id at or below the fence is a no-op
@@ -159,8 +159,7 @@ class TableMachine(RuleBasedStateMachine):
         bid = model.fence + 1
         self.t.apply_batch(
             self.spark.createDataFrame(rows, EVENT_SCHEMA), bid,
-            delivery=delivery, strategy=strategy, canonicalizer=canonicalize,
-            mode=mode,
+            delivery=delivery, canonicalizer=canonicalize, mode=mode,
         )
         self._record(Model(
             model.admitted + tuple(((r["part_id"], r["seq"]), bid) for r in admitted),
@@ -169,7 +168,7 @@ class TableMachine(RuleBasedStateMachine):
 
     @rule(rnd=st.randoms(use_true_random=True))
     def apply_batch(self, rnd):
-        """One batch whose size, repos, mode, strategy, delivery and
+        """One batch whose size, repos, mode, delivery and
         events all come from ``rnd``: tail-sized batches land under
         merge-on-read as one delta file for all their buckets, bigger
         ones as the kernel's per-bucket files.  The batch count is mixed
@@ -184,7 +183,6 @@ class TableMachine(RuleBasedStateMachine):
         self._apply(
             self._draw_batch(rnd, n, repos),
             rnd.choice(["auto", "auto", "cow", "mor"]),
-            rnd.choice(["broadcast", "shuffle"]),
             rnd.choice(["ordered", "unordered"]),
             stale=rnd.random() < 0.1,
         )
@@ -197,7 +195,6 @@ class TableMachine(RuleBasedStateMachine):
         repo = rnd.choice(self._split_delta_repos())
         self._apply(
             self._draw_batch(rnd, rnd.randint(1, 4), [repo]), "cow",
-            rnd.choice(["broadcast", "shuffle"]),
             rnd.choice(["ordered", "unordered"]),
         )
 
